@@ -139,9 +139,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeats = sys.env.getOrElse("BENCH_REPEATS", "3").toInt
-    val spark = graft.core.Sessions.local(cpus, cpus, "graft-bench")
+    val spark = graft.core.Sessions.local("graft-bench")
 
     val calibBefore = calibMedian()
     val calibParBefore = calibParMedian()
@@ -180,21 +179,33 @@ object Bench {
     // min (box-speed figure), max (worst), and the full sample list
     val midMarks = Set(all.size / 4, all.size / 2, 3 * all.size / 4)
     val midPar = collection.mutable.ArrayBuffer.empty[Double]
-    val results = all.zipWithIndex.map { case ((name, fn), i) =>
+    // a query that throws is listed as failed and leaves no timing: the
+    // time until a crash is not a sample
+    val failed = collection.mutable.ArrayBuffer.empty[String]
+    val results = all.zipWithIndex.flatMap { case ((name, fn), i) =>
       // min-of-2 per mark: a single sample can land on the periodic full
       // GC (cleaner.periodicGC=2min on a 28g heap) and read 2x high
       if (midMarks.contains(i)) midPar += math.min(calibParOnce(), calibParOnce())
-      def once(): Double = {
+      def once(): Option[Double] = {
         isolate()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
+        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable =>
+          System.err.println(s"bench: $name failed: $e")
+          None
+        }
       }
-      val base = (1 to repeats).map(_ => once())
+      // n samples, or None at the first failure
+      def times(n: Int): Option[Seq[Double]] = {
+        val ts = Iterator.continually(once()).take(n).takeWhile(_.isDefined).flatten.toSeq
+        if (ts.size == n) Some(ts) else None
+      }
       // sub-2s queries: medians of ~0.2-1s samples jitter ~2x run-to-run;
       // widen to median-of-(repeats+2) — costs seconds, buys stability
-      val times = if (median(base) < 2.0) base ++ Seq(once(), once()) else base
-      name -> times
+      val ts = times(repeats).flatMap(base =>
+        if (median(base) < 2.0) times(2).map(base ++ _) else Some(base))
+      if (ts.isEmpty) failed += name
+      ts.map(name -> _)
     }
 
     val calibAfter = calibMedian()
@@ -236,7 +247,7 @@ object Bench {
       case Some(names) => s""","partial":true,"bench_only":"${names.mkString(",")}""""
       case None => s""","partial":false"""
     }
-    val common = s""""metric":"total","value":$total,"unit":"sec","method":"median-of-$repeats","query_count":${results.size}$partialFields,"queries":${jmap(median)},"total_min":$totalMin,"calib_ratio":$calibRatio,"calib_par_ratio":$calibParRatio,"spark_probe_sec":$sparkProbe,"spark_probe_ratio":$sparkProbeRatio,"calib_ok":$calibOk,"sf":"$sfDir""""
+    val common = s""""metric":"total","value":$total,"unit":"sec","method":"median-of-$repeats","query_count":${results.size}$partialFields,"queries":${jmap(median)},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"total_min":$totalMin,"calib_ratio":$calibRatio,"calib_par_ratio":$calibParRatio,"spark_probe_sec":$sparkProbe,"spark_probe_ratio":$sparkProbeRatio,"calib_ok":$calibOk,"sf":"$sfDir""""
     // Full detail (per-query minima, calibration samples) goes to a file —
     // the r7 official artifact lost its numbers because the single giant
     // stdout line got truncated in the driver's captured tail. Keep the

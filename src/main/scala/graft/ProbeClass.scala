@@ -14,7 +14,7 @@ package graft
   */
 object ProbeClass {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Sessions.local("32", "32", "graft-probe")
+    val spark = graft.core.Sessions.local("graft-probe")
     spark.sparkContext.setLogLevel("WARN")
     val calibCold = Bench.calibMedian()
     Bench.sparkProbeOnce(spark) // warm: codegen + scheduler paths (cold reads ~1.4x high)

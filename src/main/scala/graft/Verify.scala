@@ -9,8 +9,7 @@ object Verify {
     // optional 3rd arg (dev loop only; the driver passes 2): comma-separated
     // name prefixes — dump just those queries (oracle_sql.json still full)
     val only = args.lift(2).map(_.split(',').toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Sessions.local(cpus, cpus, "graft-verify")
+    val spark = graft.core.Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }

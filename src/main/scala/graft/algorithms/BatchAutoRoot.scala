@@ -36,17 +36,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object BatchAutoRoot {
 
-  // dev-only phase timing (GRAFT_AR_TRACE=1): stderr, never in results
-  private val trace = sys.env.get("GRAFT_AR_TRACE").contains("1")
-  private def timed[T](tag: => String)(body: => T): T =
-    if (!trace) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[ar] $tag ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      r
-    }
-
   /** Expansion restricted to candidate (instance, cuboid) PAIRS: each
     * instance is expanded over exactly the cuboids that produced its own
     * candidates. The per-row cost of a cuboid pass is dominated by
@@ -120,10 +109,10 @@ object BatchAutoRoot {
           .filter(pmod(xxhash64(attributes.map(col): _*), col("__k")) === 0)
           .drop("__ki", "__k")
       else anomalous
-    val devRows = timed("devRows") { devSrc
+    val devRows = devSrc
       .groupBy(inst.as("__i"))
       .agg(graft.functions.VectorAgg.collectVector(col("deviation")).as("devs"))
-      .collect() }
+      .collect()
     if (devRows.isEmpty) { df.unpersist(); return empty }
     val boundaries: Map[String, Array[Double]] = devRows.map { r =>
       r.getString(0) -> AutoRoot.clusterBoundaries(r.getSeq[Double](1).sorted.toArray)
@@ -149,12 +138,12 @@ object BatchAutoRoot {
     // plan so the float fold order is untouched) — run CONCURRENTLY so
     // the driver pays one scheduling round-trip of latency, not two
     // (round 13).
-    val sizeAndTotals = timed("clusterSizes+totals") {
+    val sizeAndTotals =
       graft.core.Concurrency.awaitAll[Array[org.apache.spark.sql.Row]](Seq(
         () => withCluster.filter(col("cluster").isNotNull)
           .groupBy(inst.as("__i"), col("cluster")).agg(count(lit(1)).as("z")).collect(),
         () => withCluster.groupBy(inst.as("__i"))
-          .agg(count(lit(1)), sum(AutoRoot.termB)).collect())) }
+          .agg(count(lit(1)), sum(AutoRoot.termB)).collect()))
     val clusterSizes: Map[(String, Int), Long] =
       sizeAndTotals(0).map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     val totals: Map[String, (Long, Double)] =
@@ -212,7 +201,7 @@ object BatchAutoRoot {
       // floor(1/deltaThreshold) elements can pass x/z > deltaThreshold —
       // <= 10 * clusters * cuboids * instances rows at the default
       // threshold, independent of per-instance row count.
-      val xsAll: Array[(String, Int, Seq[String], Int, Long)] = timed("xs") {
+      val xsAll: Array[(String, Int, Seq[String], Int, Long)] =
         Cuboids.expand(expandBase.filter(col("cluster").isNotNull), allCuboids)
           .groupBy(inst.as("__i"), col("cb.cid").as("cid"), col("cb.key").as("key"),
             col("cluster").as("k"))
@@ -222,7 +211,6 @@ object BatchAutoRoot {
           .select(col("__i"), col("cid"), col("key"), col("k"), col("x"))
           .collect()
           .map(r => (r.getString(0), r.getInt(1), r.getSeq[String](2), r.getInt(3), r.getLong(4)))
-      }
       // the last layer's extra 1/z guard (autoroot.py last-layer rule) —
       // same conjunction as the reference, applied driver-side
       val xsRows = xsAll.filter { case (i, cid, _, k, _) =>
@@ -240,14 +228,13 @@ object BatchAutoRoot {
         // hashing the key array (the bare explode is ~free), so shrinking
         // the expanded set is the lever that matters.
         val yKeys = xsRows.map(t => (t._1, t._2, t._3)).distinct.toSeq
-        val yMap: Map[(String, Int, Seq[String]), Long] = timed(s"y(${yKeys.size})") {
+        val yMap: Map[(String, Int, Seq[String]), Long] =
           expandPairs(expandBase, inst, yKeys.map(t => (t._1, t._2)).distinct, allCuboids)
             .select(inst.as("__i"), col("cb.cid").as("cid"), col("cb.key").as("key"))
             .join(broadcast(yKeys.toDF("__i", "cid", "key")), Seq("__i", "cid", "key"))
             .groupBy("__i", "cid", "key").agg(count(lit(1)).as("y"))
             .collect()
             .map(r => (r.getString(0), r.getInt(1), r.getSeq[String](2)) -> r.getLong(3)).toMap
-        }
 
         // candidate splits = x/z AND x/y thresholds (+ last-layer 1/z
         // guard, already applied above) — the reference's conjunction
@@ -258,7 +245,7 @@ object BatchAutoRoot {
 
         val stats: Map[(String, Int, Seq[String]), (Long, Double, Double)] =
           if (cands.isEmpty) Map.empty
-          else timed(s"stats(${cands.length})") {
+          else {
             // NPS statistics once per DISTINCT (instance, element) —
             // value-set selection semantics as in AutoRoot.run (layer>=2
             // quirk). The probe side expands ONLY candidate (instance,

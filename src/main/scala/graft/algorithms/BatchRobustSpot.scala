@@ -69,17 +69,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object BatchRobustSpot {
 
-  // dev-only phase timing (GRAFT_BRS_TRACE=1): stderr, never in results
-  private val devTrace = sys.env.get("GRAFT_BRS_TRACE").contains("1")
-  private def timed[T](tag: => String)(body: => T): T =
-    if (!devTrace) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[brs] $tag ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      r
-    }
-
   /** Round frames at or below this many rows are persisted for the
     * round's 3-4 reuses. Default: ALWAYS cache. Round 10 skipped the
     * persist above 10M rows on the theory that corpus-sized cache
@@ -222,10 +211,10 @@ object BatchRobustSpot {
           // has the full rationale — the ID/CA screens amplify ULPs)
           import graft.functions.ExactSumAgg.exactSum
           def es(c: String) = exactSum(when(isnan(col(c)), lit(null)).otherwise(col(c)))
-          val r = timed("sums") { frame.groupBy(inst.as("__i")).agg(
+          val r = frame.groupBy(inst.as("__i")).agg(
             es("k_predict"), es("k_real"), count(lit(1)),
             es("value_predict"), es("value_real"),
-            es("cnt_predict"), es("cnt_real")).collect() }
+            es("cnt_predict"), es("cnt_real")).collect()
           r.map { row =>
             def d(i: Int) = graft.kernels.ExactSum.valueOfBytes(row.getAs[Array[Byte]](i))
             row.getString(0) -> Sums(d(1), d(2), row.getLong(3), d(4), d(5), d(6), d(7))
@@ -277,10 +266,8 @@ object BatchRobustSpot {
         if (!driverMine) Map.empty
         else {
           val n = attributes.length
-          timed("mineCollect") {
-            scored.select(inst +: attributes.map(col) :+ col("ID") :+ col("CA"): _*)
-              .collect()
-          }.groupBy(_.getString(0)).map { case (i, rs) =>
+          scored.select(inst +: attributes.map(col) :+ col("ID") :+ col("CA"): _*)
+            .collect().groupBy(_.getString(0)).map { case (i, rs) =>
             i -> rs.map(r => (Array.tabulate(n)(j => r.getString(1 + j)),
               if (r.isNullAt(n + 1)) Double.NaN else r.getDouble(n + 1),
               if (r.isNullAt(n + 2)) Double.NaN else r.getDouble(n + 2)))
@@ -324,8 +311,7 @@ object BatchRobustSpot {
               sums.keysIterator.map(_.toString -> opt.idSampleFraction).toMap
             else if (sums.valuesIterator.forall(_.n <= opt.idSampleCap))
               Map.empty // frac 1 everywhere — no thinning, no count action
-            else timed("kneeCount") {
-              positives.groupBy(inst).count().collect() }.map { r =>
+            else positives.groupBy(inst).count().collect().map { r =>
                 val n = r.getLong(1)
                 r.get(0).toString -> (
                   if (n > opt.idSampleCap) opt.idSampleCap.toDouble / n
@@ -344,9 +330,9 @@ object BatchRobustSpot {
                   col("__frac") * M)
                 .drop("__fi", "__frac")
             }
-          timed("kneeCollect") { sampled.groupBy(inst.as("__i"))
+          sampled.groupBy(inst.as("__i"))
             .agg(VectorAgg.collectVector(col("ID")).as("idv"))
-            .collect() }.map(r => r.getString(0) -> r.getSeq[Double](1).toArray.sorted).toMap
+            .collect().map(r => r.getString(0) -> r.getSeq[Double](1).toArray.sorted).toMap
         }
       val thresholds: Map[String, Double] = sums.keysIterator.map { i =>
         val ids = idVecs.getOrElse(i, Array.empty[Double])
@@ -398,11 +384,11 @@ object BatchRobustSpot {
         case None =>
           val av = explode(array(attributes.map(a =>
             struct(lit(a).as("attr"), col(a).as("value"))): _*)).as("av")
-          val modeRows = timed("modes") { flagged.filter(col("__after") && col("__times") >= 1)
+          val modeRows = flagged.filter(col("__after") && col("__times") >= 1)
             .select(inst.as("__i"), av, col("__times").as("w"))
             .groupBy(col("__i"), col("av.attr").as("attr"), col("av.value").as("value"))
             .agg(sum("w").as("cnt"))
-            .collect() }
+            .collect()
           modeRows.groupBy(_.getString(0))
             .map { case (i, rows) =>
               i -> rows.groupBy(_.getString(1)).map { case (attr, vs) =>
@@ -439,14 +425,14 @@ object BatchRobustSpot {
             val mask = attributes.zipWithIndex.map { case (a, i) =>
               when(col(a) === element_at(col("__modes"), lit(a)), 1 << i).otherwise(0)
             }.reduce(_ + _)
-            val hists = timed("hists") { flagged.join(broadcast(modesDf), inst === col("__mi"))
+            val hists = flagged.join(broadcast(modesDf), inst === col("__mi"))
               .groupBy(inst.as("__i"), mask.as("mask"))
               .agg(
                 count(lit(1)).cast("double").as("n_before"),
                 count(when(col("__after"), lit(1))).cast("double").as("n_after"),
                 sum(when(col("__after") && col("__times") >= 1, col("__times"))
                   .otherwise(0L)).cast("double").as("n_expand"))
-              .collect() }
+              .collect()
               .groupBy(_.getString(0))
             for (i <- minedInstances) {
               val rows = hists(i)

@@ -590,7 +590,7 @@ object RobustSpot {
     // of serializing ~24 driver round-trips (VERDICT r6 #2). Each chain
     // traces into a private buffer, flushed in chain order (= round
     // order 1..6) after the join, so the trace stream stays identical to
-    // the sequential loop's (RsTrace diffs rely on line order).
+    // the sequential loop's (RefTrace diffs rely on line order).
     graft.core.Concurrency.awaitAll((1 to 3).map { dim1 => () => {
       val buf = collection.mutable.ArrayBuffer.empty[String]
       val copt = effOpt.copy(trace = buf.append(_))

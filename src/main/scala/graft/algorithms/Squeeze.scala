@@ -242,7 +242,7 @@ object Squeeze {
     // keep interval order; per-cluster arithmetic is unchanged. Each
     // thread traces into a private buffer, flushed in interval order
     // after the join — concurrent runs emit the SAME trace stream as the
-    // sequential loop did (SqTrace diffs against the reference rely on
+    // sequential loop did (RefTrace diffs against the reference rely on
     // deterministic line order).
     val rootCauses =
       try graft.core.Concurrency.awaitAll(

@@ -10,6 +10,14 @@ import org.apache.spark.sql.SparkSession
   * so they are safe under either setting.
   */
 object Sessions {
+  /** Local core count for every main: the environment override, else the
+    * JVM's available processors. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** A session on [[cpus]] cores with as many shuffle partitions. */
+  def local(appName: String): SparkSession = local(cpus, cpus, appName)
+
   def local(cores: String, shufflePartitions: String, appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")

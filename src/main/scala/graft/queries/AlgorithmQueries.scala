@@ -108,10 +108,11 @@ object AlgorithmQueries {
     // gate output is prediction strings only, the oracle mirrors the
     // candidate-set logic (ep>teep with numpyDiv ±Inf/NaN semantics,
     // strict-subset gate, keep-vs-expand) without needing FP-exact
-    // scores. Cross-checked beyond the gate input via runner.Q42Probe
-    // (dual anomaly, teep ∈ {0.001, 0.02, 0.05, 0.3}: 17-prediction,
-    // 2-prediction and empty outputs all match the SQL variant). Digest
-    // pins stay as the second belt (RowGoldens.OracleBackedPins).
+    // scores. A one-off dual-anomaly probe (since retired) cross-checked
+    // it beyond the gate input (teep ∈ {0.001, 0.02, 0.05, 0.3}:
+    // 17-prediction, 2-prediction and empty outputs all matched the SQL
+    // variant). Digest pins stay as the second belt
+    // (RowGoldens.OracleBackedPins).
     GateQuery("q42_revrec_adtributor",
         GateQuery.oracleResource("q42_revrec_adtributor.sql")) { (s, dir) =>
       import s.implicits._

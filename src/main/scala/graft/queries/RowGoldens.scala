@@ -96,8 +96,7 @@ object RowGoldenGen {
     }
     val dir = args.lift(0).getOrElse("src/test/resources/fixtures")
     val sfs = args.lift(1).map(_.split(',').toSeq).getOrElse(Seq("sf0.001", "sf0.01"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.Sessions.local(cpus, cpus, "graft-row-goldens")
+    val spark = graft.core.Sessions.local("graft-row-goldens")
     spark.sparkContext.setLogLevel("WARN")
     for ((file, queries) <- Seq(
         "rows_only_golden.tsv" -> RowGoldens.rowsOnly,

@@ -35,8 +35,7 @@ object BrsFuseAB {
       (dimsSpec.split(',').toSeq.map(s => (s.take(1), s.drop(1).toInt)), nStr.toInt)
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.local(cpus, "64", "graft-brs-fuse-ab")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "64", "graft-brs-fuse-ab")
     spark.sparkContext.setLogLevel("WARN")
     val opt = RobustSpot.Options(k = 3, derived = false)
 

@@ -56,8 +56,7 @@ object CrossoverSweep {
     val algos = args.lift(2).getOrElse("riskloc,autoroot").split(',').toSeq
     val nThreads = args.lift(3).map(_.toInt).getOrElse(10)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.local(cpus, "64", "graft-crossover")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "64", "graft-crossover")
     spark.sparkContext.setLogLevel("WARN")
 
     val results = collection.mutable.ArrayBuffer.empty[CellResult]
@@ -183,7 +182,7 @@ object CrossoverSweep {
     md ++= s"the instance-keyed union; sequential = per-instance runs on $nThreads\n"
     md ++= "concurrent driver threads (Runner.runAll's default). Prediction\n"
     md ++= "equality asserted per cell. Box: local[" +
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "].\n\n"
+      graft.core.Sessions.cpus + "].\n\n"
     md ++= "| algo | rows/instance | instances | batch (s) | sequential (s) | winner | batch==seq |\n"
     md ++= "|---|---|---|---|---|---|---|\n"
     results.foreach { r =>

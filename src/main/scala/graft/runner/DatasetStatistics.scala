@@ -77,8 +77,7 @@ object DatasetStatistics {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.core.Sessions.local(cpus, cpus, "graft-dataset-statistics")
+    val spark = graft.core.Sessions.local("graft-dataset-statistics")
     spark.sparkContext.setLogLevel("WARN")
     val (stats, corpus) = analyze(spark,
       opts.getOrElse("data-root", "data"), opts.getOrElse("run-path", ""),

@@ -13,8 +13,7 @@ object HCorpusGen {
     val numInstances = args.lift(1).map(_.toInt).getOrElse(4)
     val dims = args.lift(2).map(_.split(',').toSeq.map(s => (s.take(1), s.drop(1).toInt)))
       .getOrElse(HCorpus.HDims)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.Sessions.local(cpus, "64", "graft-h-corpus-gen")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "64", "graft-h-corpus-gen")
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     HCorpus.corpus(spark, numInstances, dims).write.mode("overwrite").parquet(outDir)

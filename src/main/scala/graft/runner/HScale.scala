@@ -190,8 +190,7 @@ object HScale {
     val outMd = args.lift(2).getOrElse("H_SCALE.md")
     val seqSamples = args.lift(3).map(_.toInt).getOrElse(2)
     val algos = args.lift(4).map(_.split(',').toSeq).getOrElse(allAlgos)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.Sessions.local(cpus, "64", "graft-h-scale")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "64", "graft-h-scale")
     spark.sparkContext.setLogLevel("WARN")
 
     val perInstance = dims.map(_._2.toLong).product
@@ -220,7 +219,7 @@ object HScale {
     md ++= "# H-shape scale rehearsal\n\n"
     md ++= s"Corpus: $numInstances instances x $perInstance leaf rows " +
       s"(dims ${dims.map { case (n, c) => s"${n}:${c}" }.mkString(", ")}) = $total rows, " +
-      s"parquet, ${cpus} cores, 64 shuffle partitions.\n"
+      s"parquet, ${graft.core.Sessions.cpus} cores, 64 shuffle partitions.\n"
     md ++= "Per-instance size matches the reference H dataset " +
       "(README.md:119-122: dims 10 5 250 20 8 12 = 24M rows/file); " +
       "the reference runs it 100 files x 1 thread in pandas.\n\n"

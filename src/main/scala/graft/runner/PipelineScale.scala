@@ -219,8 +219,7 @@ object PipelineScale {
     val nDocs = args.lift(0).map(_.toLong).getOrElse(2000000L)
     val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
     val outMd = args.lift(2).getOrElse("PIPELINE_SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.local(cpus, "40", "graft-pipeline-scale")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "40", "graft-pipeline-scale")
     spark.sparkContext.setLogLevel("WARN")
     val work = java.nio.file.Files.createTempDirectory("graft_pipescale").toString
 

@@ -21,9 +21,7 @@ object PlanDump {
     val suffix = args(1)
     val only = args.lift(2).map(_.split(',').toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.core.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-plandump")
+    val spark = graft.core.Sessions.local("graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
 

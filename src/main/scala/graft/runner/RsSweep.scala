@@ -201,8 +201,7 @@ object RsSweep {
     val files = golden.keys.map(_._2).toSeq.distinct.sorted
     println(s"${files.size} cases x ${algos.size} algorithms")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.Sessions.local(cpus, cpus, "graft-rs-sweep")
+    val spark = graft.core.Sessions.local("graft-rs-sweep")
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()
@@ -280,7 +279,7 @@ object RsSweep {
     } else md ++= "\nEvery per-case prediction set matches the reference exactly.\n"
 
     md ++= f"\nSweep wall-clock: $wall%.0f s (${algos.size} algorithms x ${files.size} cases, " +
-      f"${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")} cores).\n"
+      f"${graft.core.Sessions.cpus} cores).\n"
     java.nio.file.Files.write(java.nio.file.Paths.get(outMd),
       md.toString.getBytes("UTF-8"))
     println(s"wrote $outMd; all-match=$allMatch")

@@ -428,8 +428,7 @@ object Runner {
       })
     require(Set("auto", "batch", "sequential")(mode), s"bad --mode $mode")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.core.Sessions.local(cpus, cpus, s"graft-run-$algorithm")
+    val spark = graft.core.Sessions.local(s"graft-run-$algorithm")
     spark.sparkContext.setLocalProperty("spark.scheduler.mode", "FAIR")
 
     val results = opts.get("corpus") match {

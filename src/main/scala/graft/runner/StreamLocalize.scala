@@ -153,8 +153,7 @@ object StreamLocalize {
     val spikeEvery = args.lift(2).map(_.toInt).getOrElse(8)
     val outMd = args.lift(3).getOrElse("STREAM_LOCALIZE.md")
     val algo = args.lift(4).getOrElse("adtributor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.Sessions.local(cpus, "64", "graft-stream-localize")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "64", "graft-stream-localize")
     spark.sparkContext.setLogLevel("WARN")
 
     val (windows, wall, inputRows) = run(spark, dims, minutes, spikeEvery, algo = algo)

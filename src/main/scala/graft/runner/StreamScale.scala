@@ -160,8 +160,7 @@ object StreamScale {
       .getOrElse(Seq("a" -> 10, "b" -> 5, "c" -> 250, "d" -> 20))
     val minutes = args.lift(1).map(_.toInt).getOrElse(96)
     val outMd = args.lift(2).getOrElse("STREAM_SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.core.Sessions.local(cpus, "64", "graft-stream-scale")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "64", "graft-stream-scale")
     spark.sparkContext.setLogLevel("WARN")
 
     val r = run(spark, dims, minutes)

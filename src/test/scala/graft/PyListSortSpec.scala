@@ -30,8 +30,8 @@ class PyListSortSpec extends AnyFunSuite {
         var i = 0
         while (i < got.length) {
           val same = (got(i).isNaN && want(i).isNaN) || got(i) == want(i)
-          assert(same,
-            s"case $lineNo pos $i: got ${render(got)} want ${render(want)}")
+          // render the (up to 20k-element) clue only on a mismatch
+          if (!same) fail(s"case $lineNo pos $i: got ${render(got)} want ${render(want)}")
           i += 1
         }
       }

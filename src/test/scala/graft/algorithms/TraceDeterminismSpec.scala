@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 /** The concurrent driver chains (RobustSpot drill-down, Squeeze cluster
   * searches) buffer per-thread trace lines and flush them in sequential
   * order — so opt.trace output must be IDENTICAL across runs despite
-  * thread interleaving. RsTrace/SqTrace diff these streams line-by-line
+  * thread interleaving. RefTrace output is diffed line-by-line
   * against the reference's debug output; nondeterministic order would
   * make those diffs spuriously fail. */
 class TraceDeterminismSpec extends AnyFunSuite {

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Cross-check the q43 AutoRoot oracle beyond the gate input: substitute a
 probe injection into the generated q43_autoroot.sql and diff DuckDB's
-root causes against `sbt "runMain graft.runner.Q43Probe <sf> <m1> [b2 r2 m2]"`.
+root causes against `sbt "runMain graft.runner.OracleProbe <sf> autoroot <m1>
+[b2 r2 m2]"` (tools/run_probes.sh splits the scenario's lines out of the
+matrix run).
 
 Usage:
   python3 tools/check_autoroot_probe.py <sfdir> <m1> [b2 r2 m2] < probe_out.txt

@@ -2,8 +2,9 @@
 """Cross-check a BATCH algorithm oracle (q47/q48/q49) beyond the gate
 input: substitute per-instance anomaly multipliers into the generated
 batch SQL (the gate uses m=2.0 for all three instances) and diff DuckDB's
-per-instance results against `sbt "runMain graft.runner.BatchProbe
-<family> <sf> <m1> <m2> <m3>"` output arriving on stdin.
+per-instance results against `sbt "runMain graft.runner.OracleProbe <sf>
+batch <family> <m1> <m2> <m3>"` output arriving on stdin (tools/run_probes.sh
+splits the scenario's lines out of the matrix run).
 
 The substitution threads a `mult` column through the inst() VALUES list
 and replaces the injection CASE's constant 2.0 with it, so every

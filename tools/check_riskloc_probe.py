@@ -2,11 +2,12 @@
 """Cross-check the q40 RiskLoc oracle beyond the gate input: substitute a
 probe injection (primary multiplier m1, optional second anomaly) into the
 generated q40_riskloc.sql and diff DuckDB's root causes against the
-output of `sbt "runMain graft.runner.Q40Probe <sf> <m1> [b2 r2 m2]"`.
+output of `sbt "runMain graft.runner.OracleProbe <sf> riskloc <m1> [b2 r2 m2]"`
+(tools/run_probes.sh splits the scenario's lines out of the matrix run).
 
 Usage:
   python3 tools/check_riskloc_probe.py <sfdir> <m1> [b2 r2 m2] < probe_out.txt
-The Q40Probe stdout (lines `RC\tlabel\tlayer\trisk`) arrives on stdin.
+The probe's lines `RC\tlabel\tlayer\trisk` arrive on stdin.
 Driver-side tooling only.
 """
 import sys, duckdb

@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Cross-check the q44 Squeeze oracle beyond the gate input: substitute a
 probe injection into the generated q44_squeeze.sql and diff DuckDB's
-prediction strings against `sbt "runMain graft.runner.Q44Probe <sf> <m1>
-[b2 r2 m2]"` (PRED lines; TR trace lines are ignored here but useful for
-manual stage-by-stage debugging when this script reports MISMATCH).
+prediction strings against `sbt "runMain graft.runner.OracleProbe <sf> squeeze
+<m1> [b2 r2 m2]"` (PRED lines; TR trace lines are ignored here but useful for
+manual stage-by-stage debugging when this script reports MISMATCH;
+tools/run_probes.sh splits the scenario's lines out of the matrix run).
 
 Usage:
   python3 tools/check_squeeze_probe.py <sfdir> <m1> [b2 r2 m2] < probe_out.txt

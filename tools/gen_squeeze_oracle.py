@@ -50,8 +50,8 @@ silent agreement):
     to last-ulp noise.
 
 Emits src/main/resources/graft/oracles/{q44_squeeze,q48_batch_squeeze}.sql.
-Driver-side tooling only; cross-check with runner.Q44Probe +
-tools/check_squeeze_probe.py.
+Driver-side tooling only; cross-check with tools/run_probes.sh
+(runner.OracleProbe + tools/check_squeeze_probe.py).
 """
 import re
 import sys

@@ -28,7 +28,7 @@ from utils.run_utils import run_method, get_label
 from utils.evaluation import root_cause_postprocessing, score_root_causes
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-# overridable for the wide sweep (runner.GenSweep / GEN_SWEEP.md)
+# overridable for the wide sweep recorded in GEN_SWEEP*.md
 CORPUS = os.environ.get("GEN_SWEEP_CORPUS",
     os.path.join(HERE, "..", "src", "test", "resources", "gen_corpus"))
 OUT = os.environ.get("GEN_SWEEP_OUT",

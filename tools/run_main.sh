@@ -3,9 +3,10 @@
 # (faster and more isolated than `sbt runMain`: no sbt JVM, fresh heap per
 # run — the same way the round driver invokes Bench/Verify).
 # Usage: tools/run_main.sh [-Xmx<size>] <mainClass> [args...]
+# The heap defaults to SPARK_DRIVER_MEM, else 4g.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-XMX="64g"
+XMX="${SPARK_DRIVER_MEM:-4g}"
 if [[ "${1:-}" == -Xmx* ]]; then XMX="${1#-Xmx}"; shift; fi
 MAIN="$1"; shift
 exec java -Xmx"$XMX" -XX:+IgnoreUnrecognizedVMOptions \
