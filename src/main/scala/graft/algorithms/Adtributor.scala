@@ -133,12 +133,14 @@ object Adtributor {
       r.getString(0) -> Candidate(r.getString(0), elems, r.getDouble(2), r.getDouble(3))
     }.toMap
 
-    // Stable top-k by surprise desc, preserving the input dimension order
-    // on ties (python sorted() is stable over the dims loop order).
-    dims.flatMap(byDim.get)
-      .sortBy(c => -c.surprise)
-      .take(opt.k)
+    topKBySurprise(dims, byDim, opt.k)(_.surprise)
   }
+
+  /** Stable top-k by surprise desc, preserving the input dimension order
+    * on ties (python sorted() is stable over the dims loop order). */
+  private[algorithms] def topKBySurprise[C](dims: Seq[String], byDim: Map[String, C],
+      k: Int)(surprise: C => Double): Seq[C] =
+    dims.flatMap(byDim.get).sortBy(c => -surprise(c)).take(k)
 
   /** Canonical prediction strings: one per element, `dim=value`
     * (utils/evaluation.py:36-56). */

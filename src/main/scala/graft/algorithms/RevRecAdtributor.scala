@@ -25,7 +25,6 @@ object RevRecAdtributor {
 
   /** rev_adtributor: per-dimension full candidate sets (reference :16-35). */
   private def revAdtributor(df: DataFrame, dims: Seq[String], opt: Options): Seq[Candidate] = {
-    opt.trace(s"NODE dims=${dims.mkString(",")}")
     val scored = Adtributor.scoredElements(df, dims, opt.derived)
     // NaN ep fails `ep > teep` in pandas (Spark would order NaN above all)
     val passes = !isnan(col("ep")) && col("ep") > opt.teep
@@ -39,18 +38,25 @@ object RevRecAdtributor {
         count(when(passes, lit(1))).as("n_cand"))
       .collect()
     val byDim = perDim.flatMap { r =>
-      val dim = r.getString(0)
-      val cands = r.getSeq[String](1)
-      val (nTotal, nCand) = (r.getLong(4), r.getLong(5))
-      opt.trace(s"DIM $dim nTotal=$nTotal nCand=$nCand " +
-        s"ep=${if (r.isNullAt(2)) "null" else java.lang.Double.toHexString(r.getDouble(2))} " +
-        s"surprise=${if (r.isNullAt(3)) "null" else java.lang.Double.toHexString(r.getDouble(3))} " +
-        s"cands=${cands.mkString(",")}")
-      if (nCand > 0 && nCand < nTotal)
-        Some(dim -> Candidate(cands.map(e => Seq(dim -> e)), Seq(dim), r.getDouble(2), r.getDouble(3)))
-      else None
+      def nullable(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
+      dimCandidate(r.getString(0), r.getSeq[String](1).toSeq, nullable(2), nullable(3),
+        r.getLong(4), r.getLong(5), opt)
     }.toMap
-    dims.flatMap(byDim.get).sortBy(c => -c.surprise).take(opt.k)
+    Adtributor.topKBySurprise(dims, byDim, opt.k)(_.surprise)
+  }
+
+  /** One dimension's candidate set: its elements passing the EP threshold
+    * (`cands`, sorted), their EP and surprise sums (NULL with none), when
+    * they are a strict subset of the `nTotal` elements. */
+  private[algorithms] def dimCandidate(dim: String, cands: Seq[String],
+      epSum: Option[Double], surpriseSum: Option[Double], nTotal: Long, nCand: Long,
+      opt: Options): Option[(String, Candidate)] = {
+    def hex(x: Option[Double]) = x.fold("null")(java.lang.Double.toHexString)
+    opt.trace(s"DIM $dim nTotal=$nTotal nCand=$nCand ep=${hex(epSum)} " +
+      s"surprise=${hex(surpriseSum)} cands=${cands.mkString(",")}")
+    if (nCand > 0 && nCand < nTotal)
+      Some(dim -> Candidate(cands.map(e => Seq(dim -> e)), Seq(dim), epSum.get, surpriseSum.get))
+    else None
   }
 
   /** `list(set(dimensions) - set(candidate_set['dimension']))` (reference
@@ -82,22 +88,31 @@ object RevRecAdtributor {
     * stream — and every collected number — is identical to the
     * sequential loop's. */
   def run(df: DataFrame, dims: Seq[String], opt: Options = Options()): Seq[Candidate] =
-    runAtDepth(df, dims, opt, depth = 0)
+    drillDown[DataFrame](df, dims, opt, depth = 0, concurrentDepth = 3,
+      revAdtributor, (d, dim, value) => d.filter(col(dim) === value))
 
-  /** ADVICE r13: every recursion node used to open its own 4-thread pool,
+  /** The recursion over any frame type: `node` scores one node's
+    * dimensions, `sub` keeps one element's leaves.
+    *
+    * ADVICE r13: every recursion node used to open its own 4-thread pool,
     * so total in-flight driver threads (and Spark jobs) grew ~4^depth with
-    * no global bound. Concurrency is now confined to the top THREE
-    * recursion levels (<= 4 + 16 + 64 tasks in flight — in practice far
-    * fewer, and the levels where nearly all overlap-able jobs live; at
-    * the gate's 3 attributes depth-3 nodes never recurse, so this keeps
-    * the round-13 measured overlap shape intact); deeper nodes recurse
-    * sequentially inside their parent's thread. Results and the flushed
-    * trace stream are unchanged: the sequential order below the cap is
-    * exactly the buffered depth-first order the concurrent version
+    * no global bound. Concurrency is now confined to the recursion levels
+    * above `concurrentDepth` (3 on Spark: <= 4 + 16 + 64 tasks in flight —
+    * in practice far fewer, and the levels where nearly all overlap-able
+    * jobs live; at the gate's 3 attributes depth-3 nodes never recurse, so
+    * this keeps the round-13 measured overlap shape intact); deeper nodes
+    * recurse sequentially inside their parent's thread. Results and the
+    * flushed trace stream are unchanged: the sequential order below the
+    * cap is exactly the buffered depth-first order the concurrent version
     * flushed. */
-  private def runAtDepth(df: DataFrame, dims: Seq[String], opt: Options,
-      depth: Int): Seq[Candidate] = {
-    val explanatory = revAdtributor(df, dims, opt)
+  private[algorithms] def drillDown[F](df: F, dims: Seq[String], opt: Options,
+      depth: Int, concurrentDepth: Int,
+      node: (F, Seq[String], Options) => Seq[Candidate],
+      sub: (F, String, String) => F): Seq[Candidate] = {
+    def recurse(f: F, ds: Seq[String], o: Options) =
+      drillDown(f, ds, o, depth + 1, concurrentDepth, node, sub)
+    opt.trace(s"NODE dims=${dims.mkString(",")}")
+    val explanatory = node(df, dims, opt)
 
     // one task per (candidate, element) that needs a deeper recursion
     val subs: Seq[(Int, Seq[(String, String)], String, Seq[String])] =
@@ -109,16 +124,14 @@ object RevRecAdtributor {
       }
     val subResults: Map[(Int, Seq[(String, String)]), Seq[Candidate]] =
       if (subs.isEmpty) Map.empty
-      else if (depth >= 3) subs.map { case (ci, elem, dim, remaining) =>
-        val sub = df.filter(col(dim) === elem.head._2)
-        (ci, elem) -> runAtDepth(sub, remaining, opt, depth + 1)
+      else if (depth >= concurrentDepth) subs.map { case (ci, elem, dim, remaining) =>
+        (ci, elem) -> recurse(sub(df, dim, elem.head._2), remaining, opt)
       }.toMap
       else graft.core.Concurrency.awaitAll(subs.map {
         case (ci, elem, dim, remaining) => () => {
           val buf = collection.mutable.ArrayBuffer.empty[String]
           val copt = opt.copy(trace = buf.append(_))
-          val sub = df.filter(col(dim) === elem.head._2)
-          ((ci, elem), runAtDepth(sub, remaining, copt, depth + 1), buf)
+          ((ci, elem), recurse(sub(df, dim, elem.head._2), remaining, copt), buf)
         }
       }).map { case (k, r, buf) => buf.foreach(opt.trace); k -> r }.toMap
 

@@ -55,8 +55,13 @@ object RiskLoc {
     val hi = devs.orderBy(desc("deviation")).limit(n + 1).withColumn("side", lit(1))
     val both = lo.unionByName(hi).collect()
     devs.unpersist()
-    val smallest = both.filter(_.getInt(1) == 0).map(_.getDouble(0))
-    val largest = both.filter(_.getInt(1) == 1).map(_.getDouble(0))
+    cutoffOf(both.filter(_.getInt(1) == 0).map(_.getDouble(0)).toSeq,
+      both.filter(_.getInt(1) == 1).map(_.getDouble(0)).toSeq)
+  }
+
+  /** The cutoff from the n+1 smallest distinct deviations (ascending) and
+    * the n+1 largest (descending). */
+  private[algorithms] def cutoffOf(smallest: Seq[Double], largest: Seq[Double]): Double = {
     val minVal = smallest.max
     val maxVal = largest.min
     // python min(a, b, key=abs): first wins ties
@@ -104,8 +109,10 @@ object RiskLoc {
     (scored, anomalyEpSum * opt.pepThreshold, base, anomalyEpSum)
   }
 
-  private type PruneState = Map[String, Seq[String]]
-  private case class Winner(cid: Int, key: Seq[String], ep: Double,
+  private[algorithms] type PruneState = Map[String, Seq[String]]
+  private[algorithms] type Pruned =
+    collection.mutable.Map[String, collection.mutable.ArrayBuffer[String]]
+  private[algorithms] case class Winner(cid: Int, key: Seq[String], ep: Double,
       high: Double, low: Double, risk: Double)
 
   private def pruneCond(c: Seq[String], state: PruneState) = c
@@ -184,12 +191,76 @@ object RiskLoc {
     scanWinners(cands, opt, cuboidOf)
   }
 
-  private case class CandStats(cid: Int, key: Seq[String], ep: Double,
+  private[algorithms] case class CandStats(cid: Int, key: Seq[String], ep: Double,
       wa: Double, wn: Double, w2: Double, nNz: Long, w1: Double)
+
+  /** One layer-1 element's stage-1 aggregates: its EP mass above zero
+    * (`epZ`), its anomalous-leaf count and its risk statistics. */
+  private[algorithms] case class Layer1Agg(epZ: Double, partSum: Long, stats: CandStats)
+
+  /** riskloc.py:89-96: prune layer-1 elements that are entirely normal or
+    * below the adjusted EP threshold. */
+  private[algorithms] def pruneLayer1(aggs: Seq[Layer1Agg], attributes: Seq[String],
+      adjEpThreshold: Double, pruned: Pruned): Unit =
+    aggs.foreach { g =>
+      if (g.epZ < adjEpThreshold || g.partSum == 0)
+        pruned.getOrElseUpdate(attributes(g.stats.cid),
+          collection.mutable.ArrayBuffer.empty[String]) += g.stats.key.head
+    }
+
+  /** Layer 1's root cause: its anomalous elements above the EP threshold,
+    * the best `maxCandidatesPerCuboid` per cuboid by EP, scanned per
+    * cuboid; the highest-EP cuboid winner wins. */
+  private[algorithms] def layer1Cause(aggs: Seq[Layer1Agg], attributes: Seq[String],
+      adjEpThreshold: Double, opt: Options): Option[RootCause] = {
+    val cands = aggs
+      .filter(g => g.partSum > 0 && g.stats.ep > adjEpThreshold)
+      .groupBy(_.stats.cid).toSeq.flatMap { case (_, gs) =>
+        gs.sortBy(-_.stats.ep).take(opt.maxCandidatesPerCuboid)
+      }
+      .map(_.stats)
+    if (cands.isEmpty) None
+    else scanWinners(cands, opt, cid => Seq(attributes(cid)))
+      .values.toSeq.sortBy(w => (-w.ep, w.cid)).headOption
+      .map(w => rootCause(Seq(attributes(w.cid)), w))
+  }
+
+  private def rootCause(cuboid: Seq[String], w: Winner): RootCause =
+    RootCause(Seq(Element(cuboid, w.key)), cuboid, cuboid.size,
+      Map("ep" -> w.ep, "high_risk" -> w.high, "low_risk" -> w.low, "risk" -> w.risk))
+
+  /** The deep cuboids (layers 2..n, cid = position + n) split into the near
+    * pass (layers 2..cap) and the far fallback; traces the stage header. */
+  private[algorithms] def deepLayout(attributes: Seq[String], deepCapLayer: Int,
+      opt: Options): (Seq[Seq[String]], Seq[(Seq[String], Int)], Seq[(Seq[String], Int)]) = {
+    val nAttrs = attributes.size
+    val deep = (2 to nAttrs).flatMap(l => attributes.combinations(l).toSeq)
+      .zipWithIndex.map { case (c, i) => (c, i + nAttrs) }
+    val cap = math.min(math.max(2, deepCapLayer), nAttrs)
+    opt.trace(s"Layers 2-$nAttrs (batched near pass to layer $cap)")
+    (deep.map(_._1), deep.filter(_._1.size <= cap), deep.filter(_._1.size > cap))
+  }
+
+  /** The shallowest deep layer's highest-EP winner. */
+  private[algorithms] def deepCause(winners: Map[Int, Winner],
+      deepCuboids: Seq[Seq[String]], nAttrs: Int): Option[RootCause] = {
+    def cuboidOf(cid: Int) = deepCuboids(cid - nAttrs)
+    (2 to nAttrs).iterator
+      .map(layer => winners.values.filter(w => cuboidOf(w.cid).size == layer).toSeq
+        .sortBy(w => (-w.ep, w.cid)).headOption)
+      .collectFirst { case Some(w) => rootCause(cuboidOf(w.cid), w) }
+  }
+
+  private[algorithms] def traceIteration(opt: Options, iteration: Int, epSum: Double,
+      adjEpThreshold: Double): Unit =
+    opt.trace(s"Iteration $iteration: anomalous ep sum $epSum threshold $adjEpThreshold")
+
+  private[algorithms] def traceNewBest(opt: Options, rc: RootCause): Unit =
+    opt.trace(s"New best score: ${rc.labels.mkString(";")} risk ${rc.scores("risk")}")
 
   /** Per-cuboid EP-desc scan on the driver: each cuboid's winner is its
     * first risk-passing candidate (riskloc.py:120-159). */
-  private def scanWinners(cands: Seq[CandStats], opt: Options,
+  private[algorithms] def scanWinners(cands: Seq[CandStats], opt: Options,
       cuboidOf: Int => Seq[String]): Map[Int, Winner] =
     cands.groupBy(_.cid).flatMap { case (cid, rows) =>
       opt.trace(s"Cuboid: ${cuboidOf(cid).mkString("[", ", ", "]")}")
@@ -228,7 +299,7 @@ object RiskLoc {
       df: DataFrame,
       attributes: Seq[String],
       adjEpThreshold: Double,
-      pruned: collection.mutable.Map[String, collection.mutable.ArrayBuffer[String]],
+      pruned: Pruned,
       usePrune: Boolean,
       opt: Options,
       epGate: Option[(() => Double, Double => Unit)] = None,
@@ -291,39 +362,19 @@ object RiskLoc {
         wave(0).asInstanceOf[Array[Row]]
     }
 
-    if (usePrune) {
-      // riskloc.py:89-96: prune layer-1 elements that are entirely normal
-      // or below the adjusted EP threshold
-      fused.foreach { r =>
-        if (r.getDouble(3) < adjEpThreshold || r.getLong(4) == 0)
-          pruned.getOrElseUpdate(attributes(r.getInt(0)),
-            collection.mutable.ArrayBuffer.empty[String]) += r.getSeq[String](1).head
-      }
-    }
-    val prunedNew: PruneState = if (usePrune) snapshotState else Map.empty
-
-    val candL1 = fused.toSeq
-      .filter(r => r.getLong(4) > 0 && r.getDouble(2) > adjEpThreshold)
-      .groupBy(_.getInt(0)).toSeq.flatMap { case (_, rows) =>
-        rows.sortBy(-_.getDouble(2)).take(opt.maxCandidatesPerCuboid)
-      }
-      .map(r => CandStats(r.getInt(0), r.getSeq[String](1).toSeq, r.getDouble(2),
+    // an element whose leaves all have NaN EP sums to NULL here and to 0.0
+    // in pandas; read it as pandas does
+    val aggs1 = fused.toSeq.map(r => Layer1Agg(r.getDouble(3), r.getLong(4),
+      CandStats(r.getInt(0), r.getSeq[String](1).toSeq,
+        if (r.isNullAt(2)) 0.0 else r.getDouble(2),
         r.getDouble(5), r.getDouble(6),
         if (r.isNullAt(9)) 0.0 else r.getDouble(9), r.getLong(10),
-        if (r.isNullAt(11)) 0.0 else r.getDouble(11)))
+        if (r.isNullAt(11)) 0.0 else r.getDouble(11))))
+    if (usePrune) pruneLayer1(aggs1, attributes, adjEpThreshold, pruned)
+    val prunedNew: PruneState = if (usePrune) snapshotState else Map.empty
 
-    val winner1 =
-      if (candL1.isEmpty) None
-      else scanWinners(candL1, opt, cid => Seq(attributes(cid)))
-        .values.toSeq.sortBy(w => (-w.ep, w.cid)).headOption
-    winner1 match {
-      case Some(w) =>
-        val cuboid = Seq(attributes(w.cid))
-        return Some(RootCause(Seq(Element(cuboid, w.key)), cuboid, 1,
-          Map("ep" -> w.ep, "high_risk" -> w.high, "low_risk" -> w.low, "risk" -> w.risk)))
-      case None => ()
-    }
-    if (nAttrs == 1) return None
+    val cause1 = layer1Cause(aggs1, attributes, adjEpThreshold, opt)
+    if (cause1.nonEmpty || nAttrs == 1) return cause1
 
     // ---- stage 2: deeper layers. Layer-capped like BatchRiskLoc
     // (round 13; the r8 batch win brought to the sequential path): winner
@@ -334,14 +385,7 @@ object RiskLoc {
     // exactly equivalent, because a near winner shadows any deeper one
     // and a near miss means layers <= cap contribute nothing. At the H
     // shape the far layers are most of the 57-cuboid explode.
-    val deep = (2 to nAttrs).flatMap(l => attributes.combinations(l).toSeq)
-      .zipWithIndex.map { case (c, i) => (c, i + nAttrs) }
-    val deepCuboids = deep.map(_._1)
-    def layerOf(cid: Int): Int = deepCuboids(cid - nAttrs).size
-    val cap = math.min(math.max(2, deepCapLayer), nAttrs)
-    val deepNear = deep.filter(_._1.size <= cap)
-    val deepFar = deep.filter(_._1.size > cap)
-    opt.trace(s"Layers 2-$nAttrs (batched near pass to layer $cap)")
+    val (deepCuboids, deepNear, deepFar) = deepLayout(attributes, deepCapLayer, opt)
 
     def deepPass(subset: Seq[(Seq[String], Int)]): Option[RootCause] = {
       val exploded2 = expandCuboids(df, subset, _ => prunedNew)
@@ -359,15 +403,7 @@ object RiskLoc {
 
       val winners = riskWinners(exploded2, candsDeep, opt, cid => deepCuboids(cid - nAttrs))
       candsDeep.unpersist()
-
-      (2 to nAttrs).iterator
-        .map(layer => winners.values.filter(w => layerOf(w.cid) == layer).toSeq
-          .sortBy(w => (-w.ep, w.cid)).headOption)
-        .collectFirst { case Some(w) =>
-          val cuboid = deepCuboids(w.cid - nAttrs)
-          RootCause(Seq(Element(cuboid, w.key)), cuboid, cuboid.size,
-            Map("ep" -> w.ep, "high_risk" -> w.high, "low_risk" -> w.low, "risk" -> w.risk))
-        }
+      deepCause(winners, deepCuboids, nAttrs)
     }
 
     deepPass(deepNear).orElse(if (deepFar.nonEmpty) deepPass(deepFar) else None)
@@ -403,8 +439,7 @@ object RiskLoc {
     var continue = true
     while (continue) {
       def traceIter(s: Double): Unit =
-        opt.trace(s"Iteration ${rootCauses.size + 1}: anomalous ep sum $s " +
-          s"threshold $adjEpThreshold")
+        traceIteration(opt, rootCauses.size + 1, s, adjEpThreshold)
       val found: Option[RootCause] = pendingEp match {
         case None =>
           traceIter(epSum0)
@@ -424,7 +459,7 @@ object RiskLoc {
       found match {
         case None => continue = false
         case Some(rc) =>
-          opt.trace(s"New best score: ${rc.labels.mkString(";")} risk ${rc.scores("risk")}")
+          traceNewBest(opt, rc)
           rootCauses += rc
           val mask = rc.cuboid.zip(rc.elements.head.pairs.map(_._2))
             .map { case (a, v) => col(a) === v }.reduce(_ && _)

@@ -18,10 +18,25 @@ package graft.core
   */
 object Concurrency {
 
-  /** Run tasks concurrently, return results in task order. */
+  /** Run tasks concurrently, return results in task order. Each task's
+    * Spark jobs carry the caller's call site (its first stack frame
+    * outside graft.core), so a job log names the algorithm step that
+    * submitted them rather than the pool thread. */
   def awaitAll[T](tasks: Seq[() => T], maxConcurrent: Int = 4): Seq[T] = {
     if (tasks.isEmpty) return Seq.empty
     if (tasks.sizeIs == 1) return Seq(tasks.head())
+    val callSite = Thread.currentThread.getStackTrace.iterator
+      .dropWhile(!_.getClassName.startsWith("graft.core."))
+      .find(!_.getClassName.startsWith("graft.core."))
+      .map(f => s"${f.getMethodName} at ${f.getFileName}:${f.getLineNumber}")
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).map(_.sparkContext)
+    def withCallSite(t: () => T): T = (sc, callSite) match {
+      case (Some(ctx), Some(site)) =>
+        ctx.setCallSite(site)
+        try t() finally ctx.clearCallSite()
+      case _ => t()
+    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(tasks.size, maxConcurrent),
       (r: Runnable) => {
@@ -33,7 +48,7 @@ object Concurrency {
       val futures = tasks.map { t =>
         pool.submit(new java.util.concurrent.Callable[Either[Throwable, T]] {
           def call(): Either[Throwable, T] =
-            try Right(t()) catch { case e: Throwable => Left(e) }
+            try Right(withCallSite(t)) catch { case e: Throwable => Left(e) }
         })
       }
       val settled =

@@ -8,7 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * driver-loop algorithm queries pay per action. Per query and repeat it
   * prints the job count, the busy time (the union of the job intervals),
   * the gaps, the jobs still unfinished after the listener drain, and a
-  * per-call-site rollup; a last line holds the job count per query as JSON
+  * per-call-site rollup (adaptive stage jobs counted under their query's
+  * site, [[attributeStageJobs]]); a last line holds the job count per query as JSON
   * (PERF_NOTES.md). Output is a TSV on stdout; nothing here is part of any
   * declared query.
   *
@@ -28,13 +29,27 @@ object JobTrace {
     total + math.max(0L, hi - lo)
   }
 
+  /** Each job's site, with the adaptive-execution stage jobs renamed:
+    * Spark submits a query's shuffle and broadcast stages from its own
+    * future threads, whose call site names no engine frame, so such a job
+    * takes the site of a job of the same SQL execution (`execution`) that
+    * was submitted from the engine. */
+  def attributeStageJobs(jobs: Seq[(String, Option[String])]): Seq[String] = {
+    def anonymous(site: String) = site.contains("CompletableFuture")
+    val byExecution = jobs.collect { case (site, Some(ex)) if !anonymous(site) => ex -> site }.toMap
+    jobs.map { case (site, ex) =>
+      if (anonymous(site)) ex.flatMap(byExecution.get).getOrElse(site) else site
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
     val repeats = args.lift(2).map(_.toInt).getOrElse(1)
     val spark = graft.core.Sessions.local("graft-job-trace")
 
-    final case class Ev(id: Int, submitMs: Long, endMs: Long, site: String)
+    final case class Ev(id: Int, submitMs: Long, endMs: Long, site: String,
+        execution: Option[String])
     val events = new java.util.concurrent.ConcurrentHashMap[Int, Ev]()
     val order = new java.util.concurrent.CopyOnWriteArrayList[Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -45,7 +60,9 @@ object JobTrace {
             si.details.linesIterator.find(l => l.contains("graft"))
               .getOrElse(si.name)))
           .getOrElse("?")
-        events.put(js.jobId, Ev(js.jobId, js.time, -1L, site))
+        val execution = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        events.put(js.jobId, Ev(js.jobId, js.time, -1L, site, execution))
         order.add(js.jobId)
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
@@ -68,7 +85,9 @@ object JobTrace {
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(300) // let listener events drain
         import scala.jdk.CollectionConverters._
-        val evs = order.asScala.flatMap(id => Option(events.get(id))).sortBy(_.submitMs)
+        val evs0 = order.asScala.flatMap(id => Option(events.get(id))).sortBy(_.submitMs).toSeq
+        val evs = evs0.zip(attributeStageJobs(evs0.map(e => (e.site, e.execution))))
+          .map { case (e, site) => e.copy(site = site) }
         println(s"== $name rep $rep rows=$n wall=${f"$wall%.2f"}s jobs=${evs.size}")
         var prevEnd = -1L
         var gap = 0L

@@ -67,9 +67,13 @@ object Runner {
     *    4.8M (4.8x and 1.4x there), sequential at the 24M endpoint;
     *  - squeeze: the 400k default — sequential from 480k up and ~3x at
     *    24M (the lone batch-favoring 4.8M cell is an anomaly both
-    *    neighbors contradict; CROSSOVER.md discusses). */
+    *    neighbors contradict; CROSSOVER.md discusses);
+    *  - rev_rec_adtributor: 0, always sequential — sequential wins every
+    *    4-instance cell (48k, 480k, 4.8M; CROSSOVER.md revrec rows), and
+    *    only `--mode batch` runs BatchRevRecAdtributor. */
   val BatchCrossoverRows: Long = 400000L
   val BatchCrossoverByAlgo: Map[String, Long] = Map(
+    "rev_rec_adtributor" -> 0L,
     "riskloc" -> Long.MaxValue,
     "autoroot" -> 4800000L,
     "robustspot" -> 1500000L,
@@ -133,52 +137,98 @@ object Runner {
     loadInstance(spark, dataRoot, biggest, derivedFlag)._1.count()
   }
 
+  /** Leaf count up to which `runAlgorithm` runs riskloc, adtributor and
+    * rev_rec_adtributor in-process: one bounded collect, then the
+    * algorithm's kernel over the collected rows (RiskLocKernel,
+    * AdtributorKernel) instead of its Spark jobs. The largest measured
+    * size at which none of the three kernels was slower than its Spark
+    * path (CROSSOVER.md, "In-process tier"). */
+  val InProcessMaxLeaves: Int = 48000
+
   /** One algorithm over one instance snapshot → canonical predictions.
     * `opts`: the reference CLI's per-algorithm flags
     * (utils/argument_parser.py:18-69) by their kebab-case names, e.g.
-    * "risk-threshold" -> "0.4", "teep" -> "0.05", "debug" -> "true". */
+    * "risk-threshold" -> "0.4", "teep" -> "0.05", "debug" -> "true".
+    *
+    * riskloc, adtributor and rev_rec_adtributor first collect at most
+    * `inProcessCap + 1` leaves; an instance of at most `inProcessCap`
+    * leaves runs in-process (see [[InProcessMaxLeaves]]) with the same
+    * predictions and trace lines, and a larger one takes the Spark path.
+    * An instance without leaf rows is an IllegalArgumentException. */
   def runAlgorithm(df: DataFrame, attributes: Seq[String], algorithm: String,
       derived: Boolean, opts: Map[String, String],
-      trace: String => Unit = _ => ()): Seq[String] = {
+      trace: String => Unit = _ => (),
+      inProcessCap: Int = InProcessMaxLeaves): Seq[String] = {
     def d(key: String, dflt: Double) = opts.get(key).map(_.toDouble).getOrElse(dflt)
     def i(key: String, dflt: Int) = opts.get(key).map(_.toInt).getOrElse(dflt)
     def b(key: String, dflt: Boolean) = opts.get(key).map(_.toBoolean).getOrElse(dflt)
-    algorithm match {
-      case "riskloc" =>
-        RiskLoc.predictions(RiskLoc.run(df, attributes, RiskLoc.Options(
-          riskThreshold = d("risk-threshold", 0.5),
-          pepThreshold = d("pep-threshold", 0.02),
-          nRemove = i("n-remove", 5),
-          removeRelative = b("remove-relative", dflt = false),
-          pruneElements = b("prune-elements", dflt = true),
-          derived = derived, trace = trace)))
-      case "adtributor" =>
-        Adtributor.predictions(Adtributor.run(df, attributes, Adtributor.Options(
-          tep = d("tep", 0.1), teep = d("teep", 0.1), k = i("k", 3), derived = derived)))
-      case "rev_rec_adtributor" =>
-        RevRecAdtributor.predictions(RevRecAdtributor.run(df, attributes,
-          RevRecAdtributor.Options(teep = d("teep", 0.2), k = i("k", 3), derived = derived)))
-      case "autoroot" =>
-        AutoRoot.predictions(AutoRoot.run(df, attributes,
-          AutoRoot.Options(deltaThreshold = d("delta-threshold", 0.25))))
-      case "squeeze" =>
-        Squeeze.run(df, attributes, Squeeze.Options(
-          psUpperBound = d("ps-upper-bound", 0.9),
-          maxNumElements = i("max-num-elements-single-cluster", 12),
-          derived = derived, trace = trace))
-      case "hotspot" =>
-        HotSpot.predictions(HotSpot.run(df, attributes, HotSpot.Options(
-          pt = d("pt", 0.8), m = i("m", 200),
-          scoring = opts.getOrElse("scoring", "gps"))))
-      case "robustspot" =>
-        RobustSpot.predictions(RobustSpot.run(df, attributes, RobustSpot.Options(
-          k = i("k", 3),
-          lambdaAmplification = i("lambda-amplification", 100),
-          caThreshold = d("contribution-ability-threshold", 0.0),
-          confidenceThreshold = d("confidence-threshold", 0.8),
-          derived = derived, trace = trace)))
-      case other => throw new IllegalArgumentException(s"unknown algorithm: $other")
+    type Kernel = (LeafSnapshot, String => Unit) => Seq[String]
+    // the Spark path, and the in-process kernel with the measures it reads
+    val (onSpark, inProcess): (() => Seq[String], Option[(Seq[String], Kernel)]) =
+      algorithm match {
+        case "riskloc" =>
+          val o = RiskLoc.Options(
+            riskThreshold = d("risk-threshold", 0.5),
+            pepThreshold = d("pep-threshold", 0.02),
+            nRemove = i("n-remove", 5),
+            removeRelative = b("remove-relative", dflt = false),
+            pruneElements = b("prune-elements", dflt = true),
+            derived = derived, trace = trace)
+          (() => RiskLoc.predictions(RiskLoc.run(df, attributes, o)),
+            Some((LeafSnapshot.measureColumns(derived, withRatios = true),
+              (s, t) => RiskLoc.predictions(RiskLocKernel.run(s, o.copy(trace = t))))))
+        case "adtributor" =>
+          val o = Adtributor.Options(
+            tep = d("tep", 0.1), teep = d("teep", 0.1), k = i("k", 3), derived = derived)
+          (() => Adtributor.predictions(Adtributor.run(df, attributes, o)),
+            Some((LeafSnapshot.measureColumns(derived, withRatios = false),
+              (s, _) => Adtributor.predictions(AdtributorKernel.adtributor(s, o)))))
+        case "rev_rec_adtributor" =>
+          val o = RevRecAdtributor.Options(teep = d("teep", 0.2), k = i("k", 3), derived = derived)
+          (() => RevRecAdtributor.predictions(RevRecAdtributor.run(df, attributes, o)),
+            Some((LeafSnapshot.measureColumns(derived, withRatios = false),
+              (s, t) => RevRecAdtributor.predictions(AdtributorKernel.revRec(s, o.copy(trace = t))))))
+        case "autoroot" =>
+          (() => AutoRoot.predictions(AutoRoot.run(df, attributes,
+            AutoRoot.Options(deltaThreshold = d("delta-threshold", 0.25)))), None)
+        case "squeeze" =>
+          (() => Squeeze.run(df, attributes, Squeeze.Options(
+            psUpperBound = d("ps-upper-bound", 0.9),
+            maxNumElements = i("max-num-elements-single-cluster", 12),
+            derived = derived, trace = trace)), None)
+        case "hotspot" =>
+          (() => HotSpot.predictions(HotSpot.run(df, attributes, HotSpot.Options(
+            pt = d("pt", 0.8), m = i("m", 200),
+            scoring = opts.getOrElse("scoring", "gps")))), None)
+        case "robustspot" =>
+          (() => RobustSpot.predictions(RobustSpot.run(df, attributes, RobustSpot.Options(
+            k = i("k", 3),
+            lambdaAmplification = i("lambda-amplification", 100),
+            caThreshold = d("contribution-ability-threshold", 0.0),
+            confidenceThreshold = d("confidence-threshold", 0.8),
+            derived = derived, trace = trace))), None)
+        case other => throw new IllegalArgumentException(s"unknown algorithm: $other")
+      }
+    def noRows() = throw new IllegalArgumentException("instance has no leaf rows")
+
+    val snapshot: Option[(LeafSnapshot, Kernel)] = inProcess match {
+      case Some((measures, kernel)) if LeafSnapshot.kernelSchema(df, attributes, measures) =>
+        val rows = LeafSnapshot.probe(df, attributes, measures, inProcessCap)
+        if (rows.isEmpty) noRows()
+        if (rows.length > inProcessCap) None
+        else try Some((LeafSnapshot.of(rows, attributes, measures, df.sparkSession), kernel))
+        catch { case _: LeafSnapshot.Unsupported => None }
+      case _ =>
+        if (df.isEmpty) noRows()
+        None
     }
+    // the kernel's trace is held back until it succeeds: an input it
+    // cannot reproduce falls back to the Spark path with a clean stream
+    snapshot.flatMap { case (s, kernel) =>
+      val lines = collection.mutable.ArrayBuffer.empty[String]
+      try { val preds = kernel(s, lines.append(_)); lines.foreach(trace); Some(preds) }
+      catch { case _: LeafSnapshot.Unsupported => None }
+    }.getOrElse(onSpark())
   }
 
   /** One whole-corpus Batch* DAG over an instance-keyed frame →
@@ -223,6 +273,10 @@ object Runner {
         BatchHotSpot.predictions(BatchHotSpot.run(union, "instance_id", attrs,
           HotSpot.Options(pt = d("pt", 0.8), m = i("m", 200),
             scoring = opts.getOrElse("scoring", "gps"))))
+      case "rev_rec_adtributor" =>
+        BatchRevRecAdtributor.run(union, "instance_id", attrs,
+            RevRecAdtributor.Options(teep = d("teep", 0.2), k = i("k", 3), derived = derived))
+          .view.mapValues(RevRecAdtributor.predictions).toMap
       case "robustspot" =>
         BatchRobustSpot.predictions(BatchRobustSpot.run(union, "instance_id", attrs,
           RobustSpot.Options(k = i("k", 3),
@@ -294,9 +348,7 @@ object Runner {
     * 0.1-11k rows/instance); above [[BatchCrossoverRows]] rows/instance
     * the concurrent sequential path wins instead (H_SCALE.md: 1.7-6x at
     * 24M rows/instance) — `--mode auto` picks per corpus. Predictions per
-    * instance are pinned equal to the sequential path by the Batch*Specs.
-    * rev_rec_adtributor has no batched variant (its recursion re-derives
-    * per-instance sub-snapshots) — it falls back to runAll. */
+    * instance are pinned equal to the sequential path by the Batch*Specs. */
   def runBatch(spark: SparkSession, dataRoot: String, refs: Seq[InstanceSource.InstanceRef],
       algorithm: String, derivedFlag: Option[Boolean],
       opts: Map[String, String] = Map.empty): Seq[InstanceResult] = {
@@ -370,7 +422,7 @@ object Runner {
         m
       }
 
-    if (resolvedMode == "batch" && algorithm != "rev_rec_adtributor") {
+    if (resolvedMode == "batch") {
       val t0 = System.nanoTime()
       val preds = runBatchAlgorithm(corpus, attrs, algorithm, derived, opts)
       val n = math.max(preds.size, labels.size)
@@ -439,11 +491,12 @@ object Runner {
         require(refs.nonEmpty, s"no instances under $dataRoot/$runPath")
         val resolvedMode =
           if (mode != "auto") mode
-          else if (algorithm == "rev_rec_adtributor") "sequential"
           // short-circuit the largest-instance count job when the decision
-          // cannot depend on it: a single instance is always sequential; a
-          // Long.MaxValue threshold (riskloc) always batches for n > 1
-          else if (refs.size <= 1) "sequential"
+          // cannot depend on it: a single instance or a 0 threshold
+          // (rev_rec_adtributor) is always sequential; a Long.MaxValue
+          // threshold (riskloc) always batches for n > 1
+          else if (refs.size <= 1 || BatchCrossoverByAlgo.get(algorithm).contains(0L))
+            "sequential"
           else if (BatchCrossoverByAlgo.getOrElse(algorithm,
               BatchCrossoverRows) == Long.MaxValue) {
             println(s"[runner] auto dispatch: instances=${refs.size} -> batch " +
@@ -457,7 +510,7 @@ object Runner {
               s"(crossover ${BatchCrossoverByAlgo.getOrElse(algorithm, BatchCrossoverRows)})")
             m
           }
-        if (resolvedMode == "batch" && algorithm != "rev_rec_adtributor")
+        if (resolvedMode == "batch")
           runBatch(spark, dataRoot, refs, algorithm, derivedFlag, opts)
         else runAll(spark, dataRoot, refs, algorithm, derivedFlag, nThreads, opts)
     }

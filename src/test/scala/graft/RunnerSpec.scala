@@ -95,7 +95,8 @@ class RunnerSpec extends AnyFunSuite {
 
   test("--batch whole-corpus mode matches per-instance results") {
     val refs = InstanceSource.instances(corpusRoot, "")
-    for (algo <- Seq("riskloc", "adtributor", "squeeze", "autoroot", "hotspot")) {
+    for (algo <- Seq("riskloc", "adtributor", "squeeze", "autoroot", "hotspot",
+        "rev_rec_adtributor")) {
       val seq = refs.map(r =>
           Runner.runInstance(spark, corpusRoot, r, algo, derivedFlag = Some(false)))
         .map(r => (r.file, r.tp, r.fp, r.fn)).sortBy(_._1)

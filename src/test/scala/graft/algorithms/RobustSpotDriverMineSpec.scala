@@ -24,7 +24,7 @@ class RobustSpotDriverMineSpec extends AnyFunSuite {
   private val attrs = Seq("a", "b", "c", "d")
 
   test("sequential driver-mine equals the distributed path (results + trace)") {
-    for (f <- files.take(4)) {
+    for (f <- files) {
       val df = InstanceSource.readFundamental(spark, corpusDir, f)
       val fastTrace = collection.mutable.ArrayBuffer.empty[String]
       val slowTrace = collection.mutable.ArrayBuffer.empty[String]
