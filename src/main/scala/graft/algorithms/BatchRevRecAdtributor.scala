@@ -160,23 +160,14 @@ object BatchRevRecAdtributor {
       // per-(node, dimension) candidate reduction — RevRecAdtributor
       // .revAdtributor's groupBy("dimension"), nid-keyed
       val passes = !isnan(col("ep")) && col("ep") > opt.teep
-      val perDimDf = scored.groupBy(col("__nid"), col("dimension"))
+      val perDim = scored.groupBy(col("__nid"), col("dimension"))
         .agg(
           sort_array(collect_list(when(passes, col("element")))).as("cands"),
           sum(when(passes, col("ep"))).as("ep_sum"),
           sum(when(passes, col("surprise"))).as("surprise_sum"),
           count(lit(1)).as("n_total"),
           count(when(passes, lit(1))).as("n_cand"))
-      // measurement-only plan evidence hook (round 14): dump each level's
-      // physical plan so the level-1 join removal is verifiable offline
-      sys.env.get("GRAFT_RRA_PLAN_DIR").foreach { dir =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, s"batchrevrec_level$level.txt"),
-          perDimDf.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-            .getBytes("UTF-8"))
-      }
-      val perDim = perDimDf.collect()
+        .collect()
 
       if (level == 1) {
         // roots derive from the level-1 aggregation itself: its collected

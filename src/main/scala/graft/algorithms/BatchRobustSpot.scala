@@ -24,21 +24,17 @@ import org.apache.spark.storage.StorageLevel
   *  - every itemset/rule support: ONE (instance, bitmask) histogram pass
   *    (the mask compares each attribute to the instance's mode via a
   *    broadcast map column);
-  *  - the final merge/collapse/rank support counts: TWO passes over the
+  *  - the final merge/collapse/rank support counts: ONE pass over the
   *    persisted round-0 frame against a broadcast (instance, cause)
   *    table.
-  * The 7 drill-down rounds pick between two shapes by measured corpus
-  * size (round 10): SMALL corpora fuse rounds 1/3/5 and 2/4/6 into one
-  * roundPass each over a pseudo-instance frame — each active (instance,
-  * chain) pair keyed `instance NUL chain` with its dropped cause applied
-  * by a broadcast join — for ~5 jobs x 3 passes + 2 total (driver
-  * round-trips dominate these shapes); LARGE corpora run the three
-  * two-round chains concurrently (the fused frame's 3x row volume loses
-  * to overlapped instance-sized scans once data dominates). Round
-  * frames are persisted only below RoundCacheMaxRows (size-aware: the
-  * sums pass counts rows for free); above it every pass recomputes the
-  * broadcast-join + ID/CA column algebra from the shared cached corpus
-  * instead of building corpus-sized caches per round.
+  * The 7-round drill-down (robustspot.py:56-69: round 0, then three
+  * independent two-round chains) runs round 0 over the corpus, then
+  * rounds 1-6 in one of two shapes picked by corpus size (the
+  * `// Rounds 1-6` block below): fused — rounds 1/3/5 and 2/4/6 as one
+  * roundPass each over a pseudo-instance frame — or the three chains as
+  * concurrent driver threads. Each pass persists its scored and flagged
+  * frames for their 3-4 reuses, unless driver-mine collects the frame
+  * once instead.
   *
   * Parity mode: when the input carries a `__row` column (per-instance CSV
   * row order), the global sums reduce with the exact NumpySum port over
@@ -46,9 +42,9 @@ import org.apache.spark.storage.StorageLevel
   * Timsort-with-NaNs scramble (PyListSort) — bit-for-bit the sequential
   * parity path, so the RS corpus golden holds case-by-case. NOTE: parity
   * mode collects each instance's full measure vectors to the driver at
-  * once (O(corpus rows) doubles) — and the three concurrent drill-down
-  * chains can each hold such vectors simultaneously (~3x the sequential
-  * peak); at extreme scale run the scale path (no `__row`) whose only
+  * once (O(corpus rows) doubles) — and rounds 1-6 hold up to three
+  * chains' vectors at once in either shape (~3x the sequential peak); at
+  * extreme scale run the scale path (no `__row`) whose only
   * per-instance driver vector is the positive-ID knee input, bounded by
   * `Options.idSampleCap` per instance.
   *
@@ -69,85 +65,29 @@ import org.apache.spark.storage.StorageLevel
   */
 object BatchRobustSpot {
 
-  /** Round frames at or below this many rows are persisted for the
-    * round's 3-4 reuses. Default: ALWAYS cache. Round 10 skipped the
-    * persist above 10M rows on the theory that corpus-sized cache
-    * builds dominated the r9 H wall — the round-11 quiet-window A/B
-    * falsified that: at the H shape (4 x 24M) the cache-skip measured
-    * 3794s vs 2577s with caching forced, same session (H_SCALE.md r11).
-    * Recomputing the broadcast-join + ID/CA algebra per pass is NOT
-    * "map-side CPU only" in effect: each round runs ~5 actions, so the
-    * skip multiplies the corpus-sized aggregation work 5x.
-    * GRAFT_BRS_CACHE_MAX (env) / graft.brs.cacheMax (sysprop) override
-    * for measurement harnesses only; never set in production. */
-  private val RoundCacheMaxRowsDefault: Long = Long.MaxValue
-
   /** Corpora at or below this many rows run rounds 1-6 as TWO fused
-    * pseudo-instance passes (2 roundPass invocations instead of 6);
-    * above it the three two-round chains run concurrently on driver
-    * threads. The r10 threshold (4M) was measured with the fused
-    * frame's 3x rows UNCACHED above RoundCacheMaxRows=10M — an
-    * interplay ADVICE r10 flagged; with round caching now unconditional
-    * the round-11 quiet A/Bs (BrsFuseAB, one JVM, one corpus per cell)
-    * have fused WINNING and the margin WIDENING with instance count:
-    * 480k x 16 = 7.68M rows fused 155.1s vs chains 217.7s; 480k x 32 =
-    * 15.36M fused 329.9s vs chains 1160.7s (3.5x), equal=true both.
-    * Round 12 bracketed from above (VERDICT r11 #2): 480k x 64 = 30.72M
-    * fused 590.6s vs chains 2085.2s — the 3.5x margin HOLDS (chains-
-    * first order, both paths JIT-warmed, equal=true, 192 causes;
-    * CROSSOVER.md round-12). Chains pay per-instance-count scan work
-    * every round; fused stays two passes per A/B-round pair regardless.
-    * Round 14 bracketed the next cell at the H per-instance shape:
-    * 9.6M x 4 = 38.4M rows, same JVM config, same corpus, same window —
-    * fused 597.9s / 58 jobs / 32.0GB heap high-water vs chains 767.3s /
-    * 130 jobs / 38.5GB (and serial chains 1354.3s: the chain overlap is
-    * confirmed worth 1.77x, H_SCALE.md round-14). Fused wins on wall
-    * AND on the structural counters that don't drift with box weather
-    * (jobs, heap).
-    * Threshold covers the measured range (now through 38.4M); above it
-    * is unmeasured on cached-fused code — the 3x pseudo frame's cache
-    * footprint argues against extrapolating to the H shape (288M cached
-    * rows), so chains keep very large corpora until a quiet round
-    * brackets the next cell.
-    * GRAFT_BRS_FUSE_MAX (env) / graft.brs.fuseMax (sysprop, re-read at
-    * each run() so an in-JVM A/B harness can flip modes between calls)
-    * override the threshold for crossover measurement only (0 forces
-    * chains, a huge value forces fused) — never set in production. */
-  private val FuseChainsMaxRowsDefault: Long = 38400000L
-
-  /** Measurement-harness knob overrides, parsed ONCE per [[run]]
-    * invocation with a clear error (ADVICE r11: the previous per-use-site
-    * re-reads threw a bare NumberFormatException deep inside a round on a
-    * malformed value, and a sysprop flipped mid-run could evaluate
-    * inconsistently within one invocation). Sysprop wins over env. */
-  private final case class Knobs(
-      roundCacheMaxRows: Long, fuseChainsMaxRows: Long, chainsMaxConc: Int)
-
-  private def parseKnob[T](sysprop: String, env: String, default: T)(parse: String => T): T =
-    sys.props.get(sysprop).orElse(sys.env.get(env)).map { v =>
-      try parse(v.trim)
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"sysprop $sysprop / env $env must be an integer, got '$v'")
-      }
-    }.getOrElse(default)
-
-  private def readKnobs(): Knobs = Knobs(
-    roundCacheMaxRows =
-      parseKnob("graft.brs.cacheMax", "GRAFT_BRS_CACHE_MAX", RoundCacheMaxRowsDefault)(_.toLong),
-    fuseChainsMaxRows =
-      parseKnob("graft.brs.fuseMax", "GRAFT_BRS_FUSE_MAX", FuseChainsMaxRowsDefault)(_.toLong),
-    chainsMaxConc =
-      parseKnob("graft.brs.chainsMaxConc", "GRAFT_BRS_CHAINS_MAX_CONC", 4)(_.toInt))
+    * pseudo-instance passes; above it the three two-round chains run
+    * concurrently on driver threads. Each side has won cells measured
+    * with BrsFuseAB (one JVM, one corpus per cell, CROSSOVER.md): on
+    * the 32-core box fused won 7.68M through 38.4M rows by 1.28-3.5x on
+    * wall (58 vs 130 jobs and 32.0 vs 38.5 GB heap at 38.4M); on a
+    * 4-core box chains won 768k rows in 4 and in 16 instances (medians
+    * 1.19x and 1.13x). The threshold still follows the 32-core cells,
+    * so those small 4-core corpora run the slower shape. Above 38.4M
+    * fused is unmeasured: its 3x pseudo frame would cache 288M rows at
+    * the H shape. */
+  val FuseChainsMaxRows: Long = 38400000L
 
   /** Whole-corpus RobustSpot: instance id -> ranked root-cause entries,
-    * per-instance equal to [[RobustSpot.run]] (BatchRobustSpotSpec). */
+    * per-instance equal to [[RobustSpot.run]] (BatchRobustSpotSpec).
+    * `fuseMaxRows` picks the rounds-1-6 shape ([[FuseChainsMaxRows]]);
+    * only shape A/Bs pass it (0 forces chains, Long.MaxValue fused). */
   def run(df0: DataFrame, instanceCol: String, attributes: Seq[String],
-      opt: Options = Options()): Map[String, Seq[Seq[Cause]]] = {
+      opt: Options = Options(),
+      fuseMaxRows: Long = FuseChainsMaxRows): Map[String, Seq[Seq[Cause]]] = {
     val spark = df0.sparkSession
     import spark.implicits._
     val inst = col(instanceCol)
-    val knobs = readKnobs()
     val effOpt = if (opt.derived) opt else opt.copy(caThreshold = -1.0)
     val parity = df0.columns.contains("__row")
 
@@ -170,20 +110,15 @@ object BatchRobustSpot {
 
     /** One batched select-expand-mine round over `frame` (already filtered
       * to the round's active instances and dropped causes). Returns the
-      * per-instance top-5 causes, the flagged frame (persisted ONLY when
-      * `persistFlags` — round 0's is reused by the final support counts;
-      * later rounds recompute the cheap broadcast-join + ID/CA column
-      * algebra per pass instead of materializing a corpus-sized cache,
-      * the BatchAutoRoot lesson: cache builds of the full frame dominated
-      * the round, while recomputed scans of the shared `adapted` cache
-      * are map-side CPU only. Every recomputed column is a deterministic
-      * function of broadcast scalars, so parity is unaffected), and the
-      * per-instance (nBefore, nAfter) totals. `sink` receives the round's
-      * trace lines — fused multi-round passes hand a router that
-      * re-buckets lines per chain so the flushed stream stays in round
-      * order. */
+      * per-instance top-5 causes, the flagged frame (persisted unless
+      * driver-mined; round 0's is reused by the final support counts),
+      * the per-instance (nBefore, nAfter) totals, the frame's row count
+      * and, under driver-mine, the collected rows per instance. `sink`
+      * receives the round's trace lines — fused multi-round passes hand a
+      * router that re-buckets lines per chain so the flushed stream stays
+      * in round order. */
     def roundPass(roundFor: String => Int, frame: DataFrame,
-        sink: String => Unit = effOpt.trace, persistFlags: Boolean = false)
+        sink: String => Unit = effOpt.trace)
         : (Map[String, Seq[Cause]], DataFrame, Map[String, (Double, Double)], Long,
           Option[Map[String, Array[RobustSpot.MineRow]]]) = {
       def traceFor(i: String): Options =
@@ -224,20 +159,8 @@ object BatchRobustSpot {
         return (Map.empty, frame.limit(0).withColumn("__after", lit(false))
           .withColumn("__times", lit(0L)), Map.empty, 0L, None)
 
-      // Size-aware round caching: the sums pass just counted every
-      // instance's rows, so the frame size is known for free. Small
-      // frames (scheduling-dominated corpora — the shapes batch mode is
-      // FOR) persist the round's scored/flagged frames exactly like the
-      // pre-fusion DAG: the cache build is cheap and saves 3-4 recomputed
-      // scans per round. Big frames skip the persists — at the H shape
-      // the per-round corpus-sized cache builds and their eviction churn
-      // dominated the round (1022s, H_SCALE r9) while recomputing the
-      // broadcast-join + ID/CA column algebra against the shared cached
-      // `adapted` is map-side CPU only. 10M sits between the largest
-      // batch-winning crossover cell (480k x 16 = 7.7M) and the
-      // sequential-winning 4.8M x 4 = 19.2M one.
+      // the sums pass just counted every instance's rows
       val frameRows = sums.valuesIterator.map(_.n).sum
-      val cacheRound = frameRows <= knobs.roundCacheMaxRows
       // Driver-mine fast path (round 14, guide §1.2 — the sequential
       // selectExpand note): when the whole round frame fits driverMineCap
       // and no knee thinning can apply, ONE collect of the scored rows
@@ -259,8 +182,7 @@ object BatchRobustSpot {
       // under driver-mine the single collect below is the only consumer of
       // the scored frame — a persist would only add a cache-build job
       val scored =
-        if (cacheRound && !driverMine) scored0.persist(StorageLevel.MEMORY_AND_DISK)
-        else scored0
+        if (driverMine) scored0 else scored0.persist(StorageLevel.MEMORY_AND_DISK)
 
       val rawByInst: Map[String, Array[(Array[String], Double, Double)]] =
         if (!driverMine) Map.empty
@@ -352,9 +274,7 @@ object BatchRobustSpot {
         .withColumn("__after", afterCond)
         .withColumn("__times", times)
       val flagged =
-        if ((persistFlags || cacheRound) && !driverMine)
-          flagged0.persist(StorageLevel.MEMORY_AND_DISK)
-        else flagged0
+        if (driverMine) flagged0 else flagged0.persist(StorageLevel.MEMORY_AND_DISK)
 
       // driver-mined rows per instance: screening flag + expansion weight
       // from the collected ID/CA with the same IEEE ops the Catalyst
@@ -446,7 +366,7 @@ object BatchRobustSpot {
             }
         }
       }
-      scored.unpersist() // no-op when the round didn't cache
+      scored.unpersist() // no-op when the round was driver-mined
       (rcOut.toMap, flagged, totals.toMap, frameRows, minedRows)
     }
 
@@ -454,73 +374,47 @@ object BatchRobustSpot {
     val rc = collection.mutable.Map.empty[String, Array[Seq[Cause]]]
     for (i <- allInstances) rc(i) = Array.fill[Seq[Cause]](7)(Seq.empty)
 
-    val (rc0, flagged0, totals0, corpusRows, mined0) =
-      roundPass(_ => 0, adapted, persistFlags = true)
+    val (rc0, flagged0, totals0, corpusRows, mined0) = roundPass(_ => 0, adapted)
     for ((i, cs) <- rc0) rc(i)(0) = cs
 
-    // Rounds 1-6: TWO execution shapes, picked by measured corpus size
-    // (round 0's sums pass counted the rows for free).
+    // Rounds 1-6: TWO execution shapes, picked by corpus size (round 0's
+    // sums pass counted the rows for free; FuseChainsMaxRows has the
+    // measured cells). The three two-round chains (1→2, 3→4, 5→6) are
+    // independent given round 0.
     //
-    // SMALL corpora (scheduling-dominated — the shapes batch mode is
-    // for: RS-like many-tiny-instance sets, the bench corpus): fuse the
-    // three chains into TWO roundPass invocations over a pseudo-instance
-    // frame — every active (instance, chain) pair becomes its own key
-    // `instance NUL chain` via a broadcast join that applies the pair's
-    // dropped cause(s) below every aggregation. Cuts roundPass
-    // invocations per corpus 7 -> 3 (driver round-trips are the cost
-    // that matters here; solo-harness q65: 13.2s -> 9.3s).
+    // Fused: TWO roundPass invocations over a pseudo-instance frame —
+    // every active (instance, chain) pair becomes its own key
+    // `<chain digit><instance>` via a broadcast join that applies the
+    // pair's dropped cause(s) below every aggregation. The one-character
+    // chain prefix makes any instance id round-trip, NUL and `]`
+    // included, so every corpus can take this shape.
     //
-    // LARGE corpora (data-dominated): the fused frame's 3x row volume
-    // through 5 serialized actions per pass LOSES to three concurrent
-    // driver chains whose instance-sized cached scans overlap on the
-    // cluster (same-box A/B at 480k x 16 = 7.7M rows: fused 462s vs
-    // concurrent 357s, with the r9 code measuring 350s in the same
-    // window) — so above the threshold the chains run concurrently
-    // exactly as r9 did, with roundPass's size-aware caching deciding
-    // per chain frame whether to persist.
-    // Parity-mode caveat either way: up to ~3x-corpus driver peak for
-    // the collected vectors (fused: one pass holds all pseudo
-    // instances; chains: three concurrent collects).
-    val Sep = 0.toChar.toString // NUL: never occurs in file/case-name ids
-    def splitKey(k: String): (String, Int) = {
-      val at = k.lastIndexOf(Sep)
-      (k.substring(0, at), k.substring(at + 1).toInt)
-    }
-    def chainOf(k: String): Int = splitKey(k)._2
-    // trace router: lines arrive "[i NUL c] ..." — strip the chain tag and
-    // bucket per chain so the flush below replays them chain-major,
-    // round-minor (chain 1 rounds 1,2; chain 2 rounds 3,4; ...), the same
-    // deterministic stream the concurrent chains produced. indexOf(Sep)
-    // is safe ONLY because the fused path is gated on NUL-free instance
-    // ids below — a NUL inside `i` would shift the tag parse.
+    // Chains: the three chains run concurrently on driver threads, each
+    // with its own instance-sized roundPass per round.
+    // Either way the trace stream is chain-major, round-minor.
+    def splitKey(k: String): (String, Int) = (k.substring(1), k.charAt(0) - '0')
+    // trace router: lines arrive "[<chain><i>] ..." — strip the chain
+    // digit and bucket per chain so the flush below replays them
+    // chain-major, round-minor (chain 1 rounds 1,2; chain 2 rounds 3,4;
+    // chain 3 rounds 5,6)
     def chainSink(bufs: Array[collection.mutable.ArrayBuffer[String]]): String => Unit =
-      line => {
-        val at = line.indexOf(Sep)
-        val end = line.indexOf(']', at)
-        val chain = line.substring(at + 1, end).toInt
-        bufs(chain - 1) += (line.substring(0, at) + line.substring(end))
-      }
+      line => bufs(line.charAt(1) - '1') += "[" + line.substring(2)
     val bufsA = Array.fill(3)(collection.mutable.ArrayBuffer.empty[String])
     val bufsB = Array.fill(3)(collection.mutable.ArrayBuffer.empty[String])
 
-    // NUL-containing instance ids (possible — ids are arbitrary input
-    // cast to string) would corrupt the fused pseudo-key `i NUL chain`
-    // parse in chainSink/splitKey; the chain path never builds composite
-    // keys, so such corpora route there regardless of size.
-    val nulFreeIds = allInstances.forall(!_.contains(Sep))
-    if (corpusRows <= knobs.fuseChainsMaxRows && nulFreeIds) {
+    if (corpusRows <= fuseMaxRows) {
       // rounds 1/3/5: drop round-0's top-chain cause per (instance, chain)
       val slotsA = for {
         chain <- 1 to 3
         i <- allInstances if rc(i)(0).size >= chain
-      } yield (i + Sep + chain, i, rc(i)(0)(chain - 1).toMap)
+      } yield (s"$chain$i", i, rc(i)(0)(chain - 1).toMap)
       if (slotsA.nonEmpty) {
         val dropsA = slotsA.toDF("__k", "__di", "__c1")
         val frameA = adapted.join(broadcast(dropsA), inst === col("__di"))
           .filter(!matchesCause(col("__c1")))
           .withColumn(instanceCol, col("__k"))
           .drop("__k", "__di", "__c1")
-        val (rcA, flA, _, _, _) = roundPass(k => 2 * chainOf(k) - 1, frameA, chainSink(bufsA))
+        val (rcA, flA, _, _, _) = roundPass(k => 2 * splitKey(k)._2 - 1, frameA, chainSink(bufsA))
         flA.unpersist()
         for ((k, cs) <- rcA) { val (i, c) = splitKey(k); rc(i)(2 * c - 1) = cs }
 
@@ -529,7 +423,7 @@ object BatchRobustSpot {
           chain <- 1 to 3
           i <- allInstances
           if rc(i)(0).size >= chain && rc(i)(2 * chain - 1).nonEmpty
-        } yield (i + Sep + chain, i, rc(i)(0)(chain - 1).toMap,
+        } yield (s"$chain$i", i, rc(i)(0)(chain - 1).toMap,
             rc(i)(2 * chain - 1).head.toMap)
         if (slotsB.nonEmpty) {
           val dropsB = slotsB.toDF("__k", "__di", "__c1", "__c2")
@@ -537,25 +431,17 @@ object BatchRobustSpot {
             .filter(!matchesCause(col("__c1")) && !matchesCause(col("__c2")))
             .withColumn(instanceCol, col("__k"))
             .drop("__k", "__di", "__c1", "__c2")
-          val (rcB, flB, _, _, _) = roundPass(k => 2 * chainOf(k), frameB, chainSink(bufsB))
+          val (rcB, flB, _, _, _) = roundPass(k => 2 * splitKey(k)._2, frameB, chainSink(bufsB))
           flB.unpersist()
           for ((k, cs) <- rcB) { val (i, c) = splitKey(k); rc(i)(2 * c) = cs }
         }
       }
       for (c <- 0 until 3) { bufsA(c).foreach(effOpt.trace); bufsB(c).foreach(effOpt.trace) }
     } else {
-      // concurrent two-round chains (1→2, 3→4, 5→6), independent given
-      // round 0 — each chain's instance-sized scans overlap on the
-      // cluster; disjoint rc slots; traces buffered per chain and
-      // flushed in chain order (= round order 1..6), the identical
-      // stream the fused path routes into bufsA/bufsB.
-      // (Round-11 H A/B kept the concurrency: with round caching ON the
-      // concurrent chains measured 2577s at 4 x 24M on a box whose
-      // unchanged-squeeze control ran 4.7x r9 speed — i.e. roughly 2x
-      // FASTER than r9's serial-rounds 1022s after the box factor —
-      // while the same window's only proven loss was the cache skip,
-      // not the overlap. GRAFT_BRS_CHAINS_MAX_CONC overrides for
-      // measurement.)
+      // concurrent chains: disjoint rc slots; traces buffered per chain
+      // and flushed in chain order (= round order 1..6), the identical
+      // stream the fused path routes into bufsA/bufsB. The overlap is
+      // worth 1.77x over serial chains at 4 x 9.6M (H_SCALE.md round 14).
       val laterFrames = collection.mutable.ArrayBuffer.empty[DataFrame]
       locally {
         val chains = graft.core.Concurrency.awaitAll(
@@ -585,7 +471,7 @@ object BatchRobustSpot {
               }
             }
             (buf, frames)
-          } }, maxConcurrent = knobs.chainsMaxConc)
+          } })
         chains.foreach { case (buf, frames) =>
           buf.foreach(effOpt.trace)
           laterFrames ++= frames

@@ -237,13 +237,9 @@ object RobustSpot {
     // anyway), ONE collect of the scored rows serves the knee input AND
     // the round's mining passes (weighted modes, bitmask histograms) and
     // the final support counts — 1 action instead of 3 per round plus the
-    // final count pass. The dumpIdCa debug path keeps the distributed
-    // collects (its trace reads __row).
-    val dumpIdCa = sys.props.contains("graft.rs.dumpIdCa") ||
-      sys.env.contains("GRAFT_RS_DUMP_IDCA")
+    // final count pass.
     val driverRaw: Option[Array[(Array[String], Double, Double)]] =
-      if (before.columns.contains("__row") || dumpIdCa ||
-        opt.idSampleFraction < 1.0 ||
+      if (before.columns.contains("__row") || opt.idSampleFraction < 1.0 ||
         s.n > math.min(opt.idSampleCap, opt.driverMineCap)) None
       else {
         val n = attrs.length
@@ -298,16 +294,6 @@ object RobustSpot {
       }
     val threshold = idThreshold(ids)
     opt.trace(s"  KNEE: n=${ids.length} knee=$threshold\n    x=${ids.mkString("[", ", ", "]")}")
-    if (sys.props.contains("graft.rs.dumpIdCa") || sys.env.contains("GRAFT_RS_DUMP_IDCA")) {
-      val rowCol = if (before.columns.contains("__row")) col("__row").cast("long")
-                   else lit(-1L).as("__row")
-      val show = scored.select((rowCol +: attrs.map(col)) :+ col("ID") :+ col("CA"): _*).collect()
-      opt.trace(show.map { r =>
-        val as = attrs.indices.map(i => s"${attrs(i)}=${r.getString(i + 1)}").mkString("&")
-        def hx(i: Int) = java.lang.Double.toHexString(if (r.isNullAt(i)) Double.NaN else r.getDouble(i))
-        s"  IDCA row=${r.getLong(0)} $as ID=${hx(attrs.length + 1)} CA=${hx(attrs.length + 2)}"
-      }.mkString("\n"))
-    }
 
     // pandas: NaN > x is false; Spark orders NaN above every number, so
     // ID=NaN (0/0) rows must be screened out explicitly

@@ -414,12 +414,6 @@ object Squeeze {
           val base = abn.sortBy(_._1.mkString(graft.core.Canonical.NulSep))
           val descent = base.map(e => e._2.toDouble / math.max(e._3.toDouble, 1e-4)).toArray
           val ordered = graft.kernels.NumpyArgsort.argsort(descent).reverse.map(base)
-          if (sys.env.get("SQ_DETAIL").contains(cuboids(cid).mkString(","))) {
-            opt.trace(s"  DETAIL ${cuboids(cid).mkString(",")}")
-            for (e <- ordered)
-              opt.trace(s"    ELEM ${cuboids(cid).zip(e._1).map { case (a, v) => s"$a=$v" }.mkString("&")} " +
-                s"n_abn=${e._2} n_all=${e._3} descent=${e._2.toDouble / math.max(e._3.toDouble, 1e-4)}")
-          }
           val nPart = math.min(math.min(ordered.length, opt.maxNumElements), nDistinctIdx - 1)
           if (nPart <= 0) Some(Plan(cid, ordered.toArray, 0, Array.empty))
           else {
@@ -517,9 +511,6 @@ object Squeeze {
             val num = divideGuard(l1v1a1, n1) + divideGuard(l1v2f2, n2)
             val ps = 1.0 - num / denom
             scores(p - 1) = ps
-            if (sys.env.get("SQ_DETAIL").contains(cuboids(pl.cid).mkString(",")))
-              opt.trace(s"    P p=$p n1=${cumN} n2=${nSubTotal - cumN} " +
-                s"ratio=${pl.ratios(p - 1)} l1f=$l1v1f1 l1a=$l1v1a1 l1n=$l1v2f2 ps=$ps")
           }
           // np.argsort(rc_scores)[::-1][0] (squeeze.py:232-238): max score
           // with ties resolved to the LARGER partition, and NaN scores —

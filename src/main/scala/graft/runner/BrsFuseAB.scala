@@ -4,16 +4,13 @@ import graft.algorithms.{BatchRobustSpot, RobustSpot}
 import graft.gen.HCorpus
 import org.apache.spark.sql.functions._
 
-/** Fused-vs-chains A/B for BatchRobustSpot's rounds-1-6 execution shape
-  * (VERDICT r10 #3): the 4M-row FuseChainsMaxRows threshold was placed
-  * from one heavily-loaded window (fused 462s vs chains 357s at 7.7M,
-  * calib 1.10-1.18), and ADVICE r10 flags the 3.4-4M zone where the
-  * fused pseudo-instance frame (3x corpus rows) exceeds
-  * RoundCacheMaxRows and runs its 5 serialized actions uncached.
+/** Fused-vs-chains A/B for BatchRobustSpot's rounds-1-6 execution shape,
+  * the measurement behind `BatchRobustSpot.FuseChainsMaxRows`
+  * (CROSSOVER.md).
   *
   * Times BatchRobustSpot.run twice per H-shaped cell in one JVM —
-  * graft.brs.fuseMax=0 (chains) vs =Long.MaxValue (fused), clearCache +
-  * GC between — and asserts the two modes' predictions are identical.
+  * fuseMaxRows = 0 (chains) vs Long.MaxValue (fused), clearCache + GC
+  * between — and reports whether the two modes' predictions are equal.
   * Both runs hit the identical localCheckpoint'ed corpus, so the delta
   * is the rounds-1-6 shape alone. Both mode paths are JIT-warmed on a
   * discarded tiny corpus before any timing, and the mode order
@@ -21,15 +18,14 @@ import org.apache.spark.sql.functions._
   * first, giving fused the same-JVM warmup for free).
   *
   * Usage: BrsFuseAB [cellsSpec]  (same "dims:n;..." syntax as
-  * [[CrossoverSweep]]; default brackets the threshold at 3.07M / 3.84M /
-  * 7.68M corpus rows).
+  * [[CrossoverSweep]]; default: 3.07M, 3.84M and 7.68M corpus rows).
   */
 object BrsFuseAB {
   def main(args: Array[String]): Unit = {
     val cells = args.lift(0).getOrElse(Seq(
-      "a10,b5,c8,d5,e8,f12:16", // 192k x 16 = 3.07M (fused, 3x frame cached)
-      "a10,b5,c10,d5,e8,f12:16", // 240k x 16 = 3.84M (fused, 3x frame UNCACHED)
-      "a10,b5,c10,d10,e8,f12:16" // 480k x 16 = 7.68M (chains on current dispatch)
+      "a10,b5,c8,d5,e8,f12:16", // 192k x 16 = 3.07M
+      "a10,b5,c10,d5,e8,f12:16", // 240k x 16 = 3.84M
+      "a10,b5,c10,d10,e8,f12:16" // 480k x 16 = 7.68M
     ).mkString(";")).split(';').toSeq.map { spec =>
       val Array(dimsSpec, nStr) = spec.split(':')
       (dimsSpec.split(',').toSeq.map(s => (s.take(1), s.drop(1).toInt)), nStr.toInt)
@@ -41,14 +37,11 @@ object BrsFuseAB {
 
     def timed(corpus: org.apache.spark.sql.DataFrame, attrs: Seq[String])(fuseMax: Long)
         : (Double, Map[String, Seq[Seq[RobustSpot.Cause]]]) = {
-      sys.props("graft.brs.fuseMax") = fuseMax.toString
-      try {
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        val r = BatchRobustSpot.run(corpus, "instance_id", attrs, opt)
-        ((System.nanoTime() - t0) / 1e9, r)
-      } finally sys.props -= "graft.brs.fuseMax"
+      spark.catalog.clearCache()
+      System.gc()
+      val t0 = System.nanoTime()
+      val r = BatchRobustSpot.run(corpus, "instance_id", attrs, opt, fuseMaxRows = fuseMax)
+      ((System.nanoTime() - t0) / 1e9, r)
     }
 
     // Discarded JIT/codegen warmup of BOTH mode paths on a tiny corpus

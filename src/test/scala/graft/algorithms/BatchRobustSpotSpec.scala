@@ -21,7 +21,9 @@ import scala.collection.mutable.ArrayBuffer
   * reference. The fixture test also asserts that its input exercises
   * that replication (non-empty causes, NaN-k leaves, a scrambled knee
   * input), so the equality can never hold vacuously. The same check on
-  * the reference's real RS cases runs wherever that tree is mounted. */
+  * the reference's real RS cases runs wherever that tree is mounted.
+  * Four generated files also run under hostile instance ids, through
+  * both rounds-1-6 shapes (fused and concurrent chains). */
 class BatchRobustSpotSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
@@ -48,6 +50,53 @@ class BatchRobustSpotSpec extends AnyFunSuite {
         attrs, RobustSpot.Options(k = 3, derived = false))
       assert(batch.getOrElse(f, Seq.empty) == seq, s"file $f")
     }
+  }
+
+  // four gen-corpus files under plain ids (their file names) and under
+  // ids with NUL, brackets and a leading digit: none may leak into the
+  // fused pass's (chain, instance) pseudo-key or its trace routing
+  private lazy val plainIds: Seq[String] = files.take(4)
+  private val hostileIds = Seq("1\u0000a]", "[b", "2]]", "\u0000[x]")
+
+  /** BatchRobustSpot over the four files keyed by `ids`: results and trace. */
+  private def runFour(ids: Seq[String], fuseMaxRows: Long = BatchRobustSpot.FuseChainsMaxRows)
+      : (Map[String, Seq[Seq[RobustSpot.Cause]]], Seq[String]) = {
+    val union = plainIds.zip(ids).map { case (f, id) =>
+      InstanceSource.readFundamental(spark, corpusDir, f).withColumn("instance_id", lit(id))
+    }.reduce(_ unionByName _)
+    val trace = ArrayBuffer.empty[String]
+    val res = BatchRobustSpot.run(union, "instance_id", Seq("a", "b", "c", "d"),
+      RobustSpot.Options(k = 3, derived = false, trace = trace.append(_)), fuseMaxRows)
+    (res, trace.toSeq)
+  }
+
+  private lazy val plainRun = runFour(plainIds)
+
+  /** Per-instance results, and each instance's own trace lines in order
+    * with their `[id] ` prefix stripped, equal to the plain-id run's. */
+  private def assertSameAsPlain(run: (Map[String, Seq[Seq[RobustSpot.Cause]]], Seq[String]))
+      : Unit = {
+    val (plainRes, plainTrace) = plainRun
+    val (res, trace) = run
+    def linesOf(t: Seq[String], id: String): Seq[String] =
+      t.filter(_.startsWith(s"[$id] ")).map(_.drop(id.length + 3))
+    assert(res.keySet == hostileIds.toSet)
+    assert(plainIds.exists(f => plainRes(f).nonEmpty), "every instance has an empty result")
+    for ((f, h) <- plainIds.zip(hostileIds)) {
+      assert(res(h) == plainRes(f), s"file $f results")
+      val lines = linesOf(plainTrace, f)
+      assert(lines.exists(_.startsWith("FINAL:")), s"file $f: no FINAL trace line")
+      assert(linesOf(trace, h) == lines, s"file $f trace")
+    }
+  }
+
+  test("hostile instance ids take the same path as plain ids") {
+    assertSameAsPlain(runFour(hostileIds))
+  }
+
+  test("the concurrent-chains shape equals the fused shape") {
+    // the corpus is far below FuseChainsMaxRows: plainRun is fused
+    assertSameAsPlain(runFour(hostileIds, fuseMaxRows = 0L))
   }
 
   /** RS parity mode over the raw cases `cases` in `dir` (sharing one

@@ -1,7 +1,7 @@
 package graft.algorithms
 
 import graft.TestSpark
-import graft.sources.InstanceSource
+import graft.sources.{InstanceSource, RsLabels, RsSource}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,6 +50,42 @@ class RobustSpotDriverMineSpec extends AnyFunSuite {
     val slow = BatchRobustSpot.run(union, "instance_id", attrs,
       RobustSpot.Options(k = 3, derived = false, driverMineCap = 0L,
         trace = slowTrace.append(_)))
+    assert(fast == slow)
+    assert(fastTrace.toSeq == slowTrace.toSeq)
+  }
+
+  test("derived-measure driver-mine equals the distributed path (results + trace)") {
+    // the rs_synth cases as derived-measure snapshots WITHOUT `__row`:
+    // the scale path, where driver-mine applies to derived measures too
+    val fixtureDir = "src/test/resources/rs_synth"
+    val cases = Seq("case1_synth", "case2_synth", "case3_synth")
+    val raws = cases.map(f => f -> RsSource.readRaw(spark, s"$fixtureDir/$f.csv"))
+    val rsAttrs = RsSource.attributesOf(raws.head._2)
+    val snaps = raws.map { case (f, raw) =>
+      assert(RsSource.attributesOf(raw) == rsAttrs, s"case $f attributes")
+      f -> RsSource.snapshot(raw, RsLabels.labelFor(fixtureDir, f).timestamp)
+    }
+    def opts(cap: Long, trace: String => Unit) = RobustSpot.Options(
+      k = 3, derived = true, driverMineCap = cap, trace = trace)
+    val fastCap = RobustSpot.Options().driverMineCap
+
+    val seqResults = for ((f, snap) <- snaps) yield {
+      val fastTrace = collection.mutable.ArrayBuffer.empty[String]
+      val slowTrace = collection.mutable.ArrayBuffer.empty[String]
+      val fast = RobustSpot.run(snap, rsAttrs, opts(fastCap, fastTrace.append(_)))
+      val slow = RobustSpot.run(snap, rsAttrs, opts(0L, slowTrace.append(_)))
+      assert(fast == slow, s"case $f results")
+      assert(fastTrace.toSeq == slowTrace.toSeq, s"case $f trace")
+      fast
+    }
+    assert(seqResults.exists(_.nonEmpty), "every case has an empty result")
+
+    val union = snaps.map { case (f, snap) => snap.withColumn("instance_id", lit(f)) }
+      .reduce(_ unionByName _)
+    val fastTrace = collection.mutable.ArrayBuffer.empty[String]
+    val slowTrace = collection.mutable.ArrayBuffer.empty[String]
+    val fast = BatchRobustSpot.run(union, "instance_id", rsAttrs, opts(fastCap, fastTrace.append(_)))
+    val slow = BatchRobustSpot.run(union, "instance_id", rsAttrs, opts(0L, slowTrace.append(_)))
     assert(fast == slow)
     assert(fastTrace.toSeq == slowTrace.toSeq)
   }

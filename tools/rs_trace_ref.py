@@ -47,21 +47,6 @@ def traced_mining(iter_index, confidence_threshold=0.8):
 mining_mod.mining = traced_mining
 rs_mod.mining = mining_mod  # module alias already shared
 
-# instrument select_expand: dump per-row ID/CA (hex) for round 0
-orig_ca = se_mod.ID_CA.get_contribution_ability
-_dumped = [False]
-def traced_ca(df):
-    out = se_mod.ID_CA.get_contribution_ability(df) if False else orig_ca(df)
-    if not _dumped[0]:
-        _dumped[0] = True
-        for _, row in out.iterrows():
-            attrs = [f"{c}={row[c]}" for c in out.columns
-                     if c not in ("ID", "CA", "k_real", "k_predict", "value_real",
-                                  "value_predict", "cnt_real", "cnt_predict")]
-            print(f"  IDCA {'&'.join(attrs)} ID={float(row['ID']).hex()} CA={float(row['CA']).hex()}")
-    return out
-se_mod.ID_CA.get_contribution_ability = traced_ca
-
 # instrument KneeLocator: print the x vector actually handed over + the knee
 import kneed
 orig_kl = se_mod.KneeLocator

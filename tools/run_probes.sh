@@ -14,9 +14,15 @@ set -euo pipefail
 # no globbing: the "*" wildcard in a scenario is an argument, not a path
 set -f
 SF="${1:-/root/testdata/sf0.01}"
-# "2.0 * R 2.0" doubles every rf=R slice: the single-attribute anomaly
-# that exercises the layer-1 winner paths
-SCEN=("2.0 Brand#25 A 3.0" "0.4" "1.15" "3.0 Brand#19 A 2.0" "2.0 * R 2.0")
+SCEN=("2.0 Brand#25 A 3.0" "0.4" "1.15" "3.0 Brand#19 A 2.0")
+# Plus one single-attribute anomaly per family, exercising the layer-1
+# winner paths. riskloc and autoroot double every rf=R slice. Squeeze
+# doubles every Brand#25 slice instead: the q44 squeeze oracle models a
+# cuboid of at most 16 abnormal elements, and at sf0.01 each rf slice
+# (* R, * A, * N) puts 17-22 elements into one, so its checker would
+# raise on them rather than compare.
+declare -A SINGLE=([riskloc]="2.0 * R 2.0" [autoroot]="2.0 * R 2.0"
+                   [squeeze]="2.0 Brand#25 * 2.0")
 # batch (q47-q49): a different multiplier per instance, so the
 # instance_id-threaded plumbing (per-instance prune lists, removals,
 # guards) diverges across instances; mi=1.0 means no anomaly in instance i
@@ -27,7 +33,7 @@ ARGS=()    # the whole matrix for OracleProbe, scenarios separated by "--"
 HEAD=()    # each scenario's header line, as OracleProbe prints it
 CHECKER=() # each scenario's checker command line
 for fam in riskloc autoroot squeeze; do
-  for s in "${SCEN[@]}"; do
+  for s in "${SCEN[@]}" "${SINGLE[$fam]}"; do
     # shellcheck disable=SC2206
     ARGS+=(-- $fam $s); HEAD+=("$fam: $s"); CHECKER+=("${CHECK[$fam]} $SF $s")
   done

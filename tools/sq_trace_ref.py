@@ -74,34 +74,6 @@ DensityBased1dCluster._cluster = traced_dcluster
 
 orig_cuboid = Squeeze._locate_in_cuboid
 def traced_cuboid(self, cuboid, indices, **params):
-    if os.environ.get("SQ_DETAIL") == ",".join(cuboid):
-        data_cuboid_indexed = self.get_indexed_data(cuboid)
-        arr = self.get_cuboid_ac_array(cuboid)[indices]
-        elements, num_elements = np.unique(arr, return_counts=True)
-        num_desc = np.asarray([np.count_nonzero(e.index_dataframe(data_cuboid_indexed)) for e in elements])
-        descent = num_elements / np.maximum(num_desc, 1e-4)
-        idx = np.argsort(descent)[::-1]
-        print(f"  DETAIL {','.join(cuboid)} n_indices={len(indices)}")
-        for i in idx:
-            print(f"    ELEM {elements[i]} n_abn={num_elements[i]} n_all={num_desc[i]} descent={descent[i]!r}")
-        from scipy.spatial.distance import cityblock
-        elements_o = elements[idx]
-        nmax = min(len(elements_o), self.option.max_num_elements_single_cluster,
-                   len(set(self.get_indexed_data(cuboid).index.values)) - 1)
-        sub = np.concatenate([indices, self.normal_indices])
-        for p in range(1, nmax + 1):
-            data_p, data_n = self.get_derived_dataframe(
-                frozenset(elements_o[:p]), cuboid=cuboid, reduction=lambda x: x,
-                return_complement=True, subset_indices=sub)
-            reduced_p, _ = self.get_derived_dataframe(
-                frozenset(elements_o[:p]), cuboid=cuboid, reduction="sum",
-                return_complement=True, subset_indices=sub)
-            ratio = (reduced_p.real.item() / reduced_p.predict.item()) if len(reduced_p) else 0
-            l1f = cityblock(data_p.real.values, data_p.predict.values)
-            l1a = cityblock(data_p.real.values, data_p.predict.values * ratio) if len(reduced_p) else cityblock(data_p.real.values, 0*data_p.real.values)
-            l1n = cityblock(data_n.real.values, data_n.predict.values)
-            print(f"    P p={p} n1={len(data_p)} n2={len(data_n)} ratio={ratio!r} "
-                  f"l1f={l1f!r} l1a={l1a!r} l1n={l1n!r}")
     rc, score = orig_cuboid(self, cuboid, indices, **params)
     print(f"  CUBOID {','.join(cuboid)} n_rc={len(rc)} score={score!r} "
           f"rc={AC.batch_to_string(rc)}")
