@@ -1,7 +1,7 @@
 package graft.algorithms
 
 import graft.functions.Scores
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * instances are small and many — scheduling-dominated corpora like RS
   * (4-9x over sequential, RS_SWEEP_BATCH.md) — and LOSES to the
   * concurrent per-instance sequential path once rows/instance outgrow
-  * Runner.BatchCrossoverRows, because every corpus-wide pass carries the
-  * big instances' rows (H_SCALE.md: sequential wins 1.7-6x at 24M
+  * their Runner.BatchCrossoverByAlgo threshold, because every corpus-wide
+  * pass carries the big instances' rows (H_SCALE.md: sequential wins 1.7-6x at 24M
   * rows/instance). Runner's default `--mode auto` picks per corpus from
   * the CROSSOVER.md-measured threshold; batch is NOT the universal scale
   * mode, it is the many-small-instances mode.
@@ -120,4 +120,15 @@ object BatchAdtributor {
         Window.partitionBy(inst).orderBy(desc("surprise"), asc("dimension"))))
       .filter(col("rank") <= opt.k)
   }
+
+  /** Canonical per-instance prediction strings from [[run]]'s collected
+    * rows: each instance's dimensions in rank order, `dim=element`. */
+  def predictions(rows: Array[Row]): Map[String, Seq[String]] =
+    rows.groupBy(_.getString(0)).view.mapValues { rs =>
+      graft.model.Labels.canonicalPredictions(
+        rs.sortBy(_.getAs[Int]("rank")).toSeq.flatMap { r =>
+          val dim = r.getAs[String]("dimension")
+          r.getSeq[String](r.fieldIndex("elements")).map(e => s"$dim=$e")
+        })
+    }.toMap
 }

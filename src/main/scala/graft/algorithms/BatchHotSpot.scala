@@ -27,8 +27,8 @@ import org.apache.spark.storage.StorageLevel
   * instances are small and many — scheduling-dominated corpora like RS
   * (4-9x over sequential, RS_SWEEP_BATCH.md) — and LOSES to the
   * concurrent per-instance sequential path once rows/instance outgrow
-  * Runner.BatchCrossoverRows, because every corpus-wide pass carries the
-  * big instances' rows (H_SCALE.md: sequential wins 1.7-6x at 24M
+  * their Runner.BatchCrossoverByAlgo threshold, because every corpus-wide
+  * pass carries the big instances' rows (H_SCALE.md: sequential wins 1.7-6x at 24M
   * rows/instance). Runner's default `--mode auto` picks per corpus from
   * the CROSSOVER.md-measured threshold; batch is NOT the universal scale
   * mode, it is the many-small-instances mode.

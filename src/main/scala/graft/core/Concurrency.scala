@@ -6,7 +6,8 @@ package graft.core
   *
   *  - a DEDICATED bounded daemon pool per call — blocked collect()s never
   *    occupy scala's process-wide global ForkJoinPool (where they would
-  *    starve Runner.runAll's instance threads and each other);
+  *    starve each other and the per-instance tasks that Runner.runAll and
+  *    Runner.runKeyed run through this same call);
   *  - `maxConcurrent` bounds simultaneous tasks: each layer pass persists
   *    its own counts/cands frames, so unbounded overlap multiplies peak
   *    storage-memory demand with the attribute count (the reason the

@@ -8,19 +8,25 @@ import org.apache.spark.sql.functions._
   * the measurement behind `BatchRobustSpot.FuseChainsMaxRows`
   * (CROSSOVER.md).
   *
-  * Times BatchRobustSpot.run twice per H-shaped cell in one JVM —
-  * fuseMaxRows = 0 (chains) vs Long.MaxValue (fused), clearCache + GC
-  * between — and reports whether the two modes' predictions are equal.
+  * Times BatchRobustSpot.run per H-shaped cell in one JVM in both modes
+  * — fuseMaxRows = 0 (chains) vs Long.MaxValue (fused), clearCache + GC
+  * before each run — and reports whether the two modes' predictions are equal.
   * Both runs hit the identical localCheckpoint'ed corpus, so the delta
   * is the rounds-1-6 shape alone. Both mode paths are JIT-warmed on a
-  * discarded tiny corpus before any timing, and the mode order
-  * alternates per cell (ADVICE r11: the r11 cells always ran chains
-  * first, giving fused the same-JVM warmup for free).
+  * discarded tiny corpus before any timing, and every cell runs
+  * [[PairOrders]]: the second leg of a pair tends to run faster, so one
+  * pair per cell can name the wrong winner. Each pair and each mode's
+  * mean over the pairs are printed.
   *
   * Usage: BrsFuseAB [cellsSpec]  (same "dims:n;..." syntax as
   * [[CrossoverSweep]]; default: 3.07M, 3.84M and 7.68M corpus rows).
   */
 object BrsFuseAB {
+
+  /** The pairs run per cell, by leg order: one chains-first, one
+    * fused-first, so the second-leg advantage falls on each mode once. */
+  val PairOrders: Seq[String] = Seq("chains-first", "fused-first")
+
   def main(args: Array[String]): Unit = {
     val cells = args.lift(0).getOrElse(Seq(
       "a10,b5,c8,d5,e8,f12:16", // 192k x 16 = 3.07M
@@ -55,25 +61,30 @@ object BrsFuseAB {
       w.unpersist()
     }
 
-    for (((dims, n), cellIdx) <- cells.zipWithIndex) {
+    for ((dims, n) <- cells) {
       val corpus = HCorpus.corpus(spark, n, dims).localCheckpoint(true)
       val rows = corpus.count()
       val attrs = dims.map(_._1)
       val timeMode = timed(corpus, attrs) _
 
-      // Alternate mode order per cell so any residual same-JVM ordering
-      // effect biases the two modes symmetrically across a sweep.
-      val ((chainsSec, chainsRes), (fusedSec, fusedRes)) =
-        if (cellIdx % 2 == 0) {
-          val c = timeMode(0L); val f = timeMode(Long.MaxValue); (c, f)
-        } else {
-          val f = timeMode(Long.MaxValue); val c = timeMode(0L); (c, f)
-        }
-
-      println(f"[brs-ab] rows=$rows%9d (n=$n) fused=$fusedSec%8.1fs " +
-        f"chains=$chainsSec%8.1fs winner=${if (fusedSec < chainsSec) "fused" else "chains"} " +
-        f"equal=${fusedRes == chainsRes} causes=${fusedRes.values.map(_.size).sum} " +
-        f"order=${if (cellIdx % 2 == 0) "chains-first" else "fused-first"}")
+      val pairs = PairOrders.map { order =>
+        val ((chainsSec, chainsRes), (fusedSec, fusedRes)) =
+          if (order == "chains-first") {
+            val c = timeMode(0L); val f = timeMode(Long.MaxValue); (c, f)
+          } else {
+            val f = timeMode(Long.MaxValue); val c = timeMode(0L); (c, f)
+          }
+        println(f"[brs-ab] rows=$rows%9d (n=$n) fused=$fusedSec%8.1fs " +
+          f"chains=$chainsSec%8.1fs winner=${if (fusedSec < chainsSec) "fused" else "chains"} " +
+          f"equal=${fusedRes == chainsRes} causes=${fusedRes.values.map(_.size).sum} " +
+          f"order=$order")
+        (fusedSec, chainsSec)
+      }
+      val fusedMean = pairs.map(_._1).sum / pairs.size
+      val chainsMean = pairs.map(_._2).sum / pairs.size
+      println(f"[brs-ab] rows=$rows%9d (n=$n) mean of ${pairs.size} pairs: " +
+        f"fused=$fusedMean%8.1fs chains=$chainsMean%8.1fs " +
+        f"winner=${if (fusedMean < chainsMean) "fused" else "chains"}")
       corpus.unpersist()
     }
     spark.stop()

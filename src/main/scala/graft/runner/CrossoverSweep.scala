@@ -1,10 +1,6 @@
 package graft.runner
 
-import graft.algorithms._
 import graft.gen.HCorpus
-import graft.model.RootCause
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Batch-vs-sequential crossover measurement (VERDICT r7 #1).
   *
@@ -20,15 +16,17 @@ import org.apache.spark.sql.functions._
   * sequential wins when instances are large (data-dominated).
   *
   * This main measures the crossover on a (rows/instance x instance count)
-  * grid of H-shaped corpora, timing BOTH modes exactly as the Runner
-  * executes them: batch = one Batch*.run over the instance-keyed union;
-  * sequential = per-instance *.run submitted concurrently (Runner.runAll's
-  * default 10 threads). Prediction equality between the modes is asserted
-  * per cell. Output: CROSSOVER.md; the measured threshold is encoded in
-  * [[Runner.chooseMode]].
+  * grid of H-shaped corpora, timing BOTH modes through Runner's own code:
+  * each is one [[Runner.runKeyed]] call over the instance-keyed corpus —
+  * batch runs the Batch* DAG, sequential runs Runner.runAlgorithm per
+  * instance (its in-process tier included) on `nThreads` concurrent
+  * instances. Equality of each instance's sorted canonical predictions
+  * between the modes is asserted per cell. Output: CROSSOVER.md; the
+  * measured threshold is encoded in [[Runner.chooseMode]].
   *
   * Usage: CrossoverSweep [outMd] [cellsSpec] [algosCsv] [nThreads]
   *   cellsSpec: "a10,b5,c2,d5,e8,f12:4;a10,b5,c10,d10,e8,f12:16;..."
+  *   algosCsv: Runner's algorithm names (default riskloc,autoroot)
   */
 object CrossoverSweep {
 
@@ -54,6 +52,7 @@ object CrossoverSweep {
       (dimsSpec.split(',').toSeq.map(s => (s.take(1), s.drop(1).toInt)), nStr.toInt)
     }
     val algos = args.lift(2).getOrElse("riskloc,autoroot").split(',').toSeq
+      .map(Runner.canonicalAlgorithm)
     val nThreads = args.lift(3).map(_.toInt).getOrElse(10)
 
     val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "64", "graft-crossover")
@@ -63,109 +62,20 @@ object CrossoverSweep {
     for ((dims, n) <- cells) {
       val corpus = HCorpus.corpus(spark, n, dims).localCheckpoint(true)
       val rowsPerInst = corpus.count() / n
-      val instances = corpus.select(col("instance_id")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      val attrs = dims.map(_._1)
-      def seqFrame(id: String) =
-        corpus.filter(col("instance_id") === id).drop("instance_id")
 
       for (algo <- algos) {
         System.gc()
-        def labelsOf(rcs: Seq[RootCause]): Seq[Seq[String]] = rcs.map(_.labels)
-
-        val (batchSec, seqSec, equal, causes) = algo match {
-          case "riskloc" =>
-            val t0 = System.nanoTime()
-            val batch = BatchRiskLoc.run(corpus, "instance_id", attrs)
-            val b = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val seq = graft.core.Concurrency.awaitAll(
-              instances.map(id => () => id -> RiskLoc.run(seqFrame(id), attrs)),
-              maxConcurrent = nThreads).toMap
-            val s = (System.nanoTime() - t1) / 1e9
-            val eq = instances.forall(id =>
-              labelsOf(batch.getOrElse(id, Seq.empty)) == labelsOf(seq(id)))
-            (b, s, eq, batch.values.map(_.size).sum)
-          case "autoroot" =>
-            val t0 = System.nanoTime()
-            val batch = BatchAutoRoot.run(corpus, "instance_id", attrs)
-            val b = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val seq = graft.core.Concurrency.awaitAll(
-              instances.map(id => () => id -> AutoRoot.run(seqFrame(id), attrs)),
-              maxConcurrent = nThreads).toMap
-            val s = (System.nanoTime() - t1) / 1e9
-            val eq = instances.forall(id =>
-              labelsOf(batch.getOrElse(id, Seq.empty)) == labelsOf(seq(id)))
-            (b, s, eq, batch.values.map(_.size).sum)
-          case "squeeze" =>
-            val opt = Squeeze.Options(derived = false)
-            val t0 = System.nanoTime()
-            val batch = BatchSqueeze.run(corpus, "instance_id", attrs, opt)
-            val b = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val seq = graft.core.Concurrency.awaitAll(
-              instances.map(id => () => id -> Squeeze.run(seqFrame(id), attrs, opt)),
-              maxConcurrent = nThreads).toMap
-            val s = (System.nanoTime() - t1) / 1e9
-            val eq = instances.forall(id =>
-              batch.getOrElse(id, Seq.empty).sorted == seq(id).sorted)
-            (b, s, eq, batch.values.map(_.size).sum)
-          case "adtributor" =>
-            val t0 = System.nanoTime()
-            val rows = BatchAdtributor.run(corpus, "instance_id", attrs).collect()
-            val b = (System.nanoTime() - t0) / 1e9
-            val byId = rows.groupBy(_.getString(0)).map { case (id, rs) =>
-              id -> rs.sortBy(_.getInt(rs.head.fieldIndex("rank")))
-                .map(r => (r.getString(1), r.getSeq[String](2).toSeq)).toSeq
-            }
-            val t1 = System.nanoTime()
-            val seq = graft.core.Concurrency.awaitAll(
-              instances.map(id => () => id -> Adtributor.run(seqFrame(id), attrs)
-                .map(c => (c.dimension, c.elements))),
-              maxConcurrent = nThreads).toMap
-            val s = (System.nanoTime() - t1) / 1e9
-            val eq = instances.forall(id => byId.getOrElse(id, Seq.empty) == seq(id))
-            (b, s, eq, rows.length)
-          case "robustspot" =>
-            val opt = RobustSpot.Options(k = 3, derived = false)
-            val t0 = System.nanoTime()
-            val batch = BatchRobustSpot.run(corpus, "instance_id", attrs, opt)
-            val b = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val seq = graft.core.Concurrency.awaitAll(
-              instances.map(id => () => id -> RobustSpot.run(seqFrame(id), attrs, opt)),
-              maxConcurrent = nThreads).toMap
-            val s = (System.nanoTime() - t1) / 1e9
-            val eq = instances.forall(id => batch.getOrElse(id, Seq.empty) == seq(id))
-            (b, s, eq, batch.values.map(_.size).sum)
-          case "hotspot" =>
-            val t0 = System.nanoTime()
-            val batch = BatchHotSpot.run(corpus, "instance_id", attrs)
-            val b = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val seq = graft.core.Concurrency.awaitAll(
-              instances.map(id => () => id -> HotSpot.run(seqFrame(id), attrs)),
-              maxConcurrent = nThreads).toMap
-            val s = (System.nanoTime() - t1) / 1e9
-            val eq = instances.forall(id => batch.get(id).contains(seq(id)))
-            (b, s, eq, batch.size)
-          case "revrec" =>
-            val t0 = System.nanoTime()
-            val batch = BatchRevRecAdtributor.run(corpus, "instance_id", attrs)
-            val b = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val seq = graft.core.Concurrency.awaitAll(
-              instances.map(id => () => id -> RevRecAdtributor.run(seqFrame(id), attrs)),
-              maxConcurrent = nThreads).toMap
-            val s = (System.nanoTime() - t1) / 1e9
-            val eq = instances.forall(id =>
-              RevRecAdtributor.predictions(batch.getOrElse(id, Seq.empty)).sorted ==
-                RevRecAdtributor.predictions(seq(id)).sorted)
-            (b, s, eq, batch.values.map(_.size).sum)
-          case other => throw new IllegalArgumentException(s"unsupported: $other")
+        def timed(mode: String): (Double, Map[String, Seq[String]]) = {
+          val t0 = System.nanoTime()
+          val preds = Runner.runKeyed(corpus, algo, mode, nThreads)
+          ((System.nanoTime() - t0) / 1e9, preds.view.mapValues(_._1.sorted).toMap)
         }
-        val r = CellResult(algo, rowsPerInst, n, batchSec, seqSec, equal, causes)
+        val (batchSec, batch) = timed("batch")
+        val (seqSec, seq) = timed("sequential")
+        val equal = (batch.keySet ++ seq.keySet).forall(id =>
+          batch.getOrElse(id, Seq.empty) == seq.getOrElse(id, Seq.empty))
+        val r = CellResult(algo, rowsPerInst, n, batchSec, seqSec, equal,
+          batch.values.map(_.size).sum)
         results += r
         println(f"[crossover] ${r.algo}%-9s rows/inst=${r.rowsPerInst}%9d n=${r.n}%3d " +
           f"batch=${r.batchSec}%8.1fs seq=${r.seqSec}%8.1fs " +
@@ -176,12 +86,12 @@ object CrossoverSweep {
     }
 
     val md = new StringBuilder
-    md ++= "# Batch-vs-sequential crossover sweep (round 8)\n\n"
-    md ++= "H-shaped corpora (HCorpus, 6 attributes at every size); both modes\n"
-    md ++= "timed exactly as Runner executes them: batch = one Batch*.run over\n"
-    md ++= s"the instance-keyed union; sequential = per-instance runs on $nThreads\n"
-    md ++= "concurrent driver threads (Runner.runAll's default). Prediction\n"
-    md ++= "equality asserted per cell. Box: local[" +
+    md ++= "# Batch-vs-sequential crossover sweep\n\n"
+    md ++= "H-shaped corpora (HCorpus); both modes timed through Runner.runKeyed:\n"
+    md ++= "batch = the Batch* DAG over the instance-keyed corpus; sequential =\n"
+    md ++= s"Runner.runAlgorithm per instance (in-process tier included) on $nThreads\n"
+    md ++= "concurrent driver threads. Equality of each instance's sorted\n"
+    md ++= "predictions asserted per cell. Box: local[" +
       graft.core.Sessions.cpus + "].\n\n"
     md ++= "| algo | rows/instance | instances | batch (s) | sequential (s) | winner | batch==seq |\n"
     md ++= "|---|---|---|---|---|---|---|\n"

@@ -5,10 +5,6 @@ import graft.eval.Evaluation
 import graft.sources.{RsLabels, RsSource}
 import org.apache.spark.sql.SparkSession
 
-import java.util.concurrent.Executors
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
-
 /** Whole-corpus parity sweep over the reference's bundled 135-case RS
   * production corpus (data/RS/anomaly.yaml) — the reference's headline
   * end-to-end use (`run.py --run-path RS`). Runs robustspot / autoroot /
@@ -148,16 +144,8 @@ object RsSweep {
               BatchHotSpot.predictions(BatchHotSpot.runParity(union, "instance_id",
                 attrs, HotSpot.Options(), f => BigInt(crc32Seed(f))))
             case "adtributor" =>
-              val rows = BatchAdtributor.run(union, "instance_id", attrs,
-                Adtributor.Options(derived = true)).collect()
-              rows.groupBy(r => r.getString(r.fieldIndex("instance_id")))
-                .view.mapValues { rs =>
-                graft.model.Labels.canonicalPredictions(
-                  rs.sortBy(_.getInt(rs.head.fieldIndex("rank"))).toSeq.flatMap { r =>
-                    val dim = r.getString(r.fieldIndex("dimension"))
-                    r.getSeq[String](r.fieldIndex("elements")).map(e => s"$dim=$e")
-                  })
-              }.toMap
+              BatchAdtributor.predictions(BatchAdtributor.run(union, "instance_id", attrs,
+                Adtributor.Options(derived = true)).collect())
             case other => throw new IllegalArgumentException(other)
           }
           got
@@ -175,14 +163,10 @@ object RsSweep {
   }
 
   def sweep(spark: SparkSession, rsDir: String, algos: Seq[String],
-      files: Seq[String], nThreads: Int = 8): Seq[CaseResult] = {
-    val pool = Executors.newFixedThreadPool(nThreads)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val fs = for (a <- algos; f <- files) yield Future(runCase(spark, rsDir, f, a))
-      Await.result(Future.sequence(fs), Duration.Inf)
-    } finally pool.shutdown()
-  }
+      files: Seq[String], nThreads: Int = 8): Seq[CaseResult] =
+    graft.core.Concurrency.awaitAll(
+      for (a <- algos; f <- files) yield () => runCase(spark, rsDir, f, a),
+      maxConcurrent = nThreads)
 
   def main(args: Array[String]): Unit = {
     val rsDir = args.lift(0).getOrElse("/root/reference/data/RS")
@@ -190,12 +174,8 @@ object RsSweep {
     val mode = args.lift(4).getOrElse("seq") // seq | batch
     val outMd = args.lift(2).getOrElse(
       if (mode == "batch") "RS_SWEEP_BATCH.md" else "RS_SWEEP.md")
-    val algos = args.lift(3).map(_.split(',').toSeq)
-      .getOrElse(
-        if (mode == "batch") Seq("robustspot", "autoroot", "squeeze", "adtributor",
-          "riskloc", "r_adtributor", "hotspot")
-        else Seq("robustspot", "autoroot", "squeeze", "adtributor", "riskloc",
-          "r_adtributor", "hotspot"))
+    val algos = args.lift(3).map(_.split(',').toSeq).getOrElse(Seq("robustspot",
+      "autoroot", "squeeze", "adtributor", "riskloc", "r_adtributor", "hotspot"))
 
     val golden = readGolden(goldenPath)
     val files = golden.keys.map(_._2).toSeq.distinct.sorted

@@ -6,10 +6,6 @@ import graft.operators.Snapshots
 import graft.sources.{InstanceSource, RsLabels, RsSource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.util.concurrent.Executors
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
-
 /** Batch-evaluation runner — the engine's `run.py` (reference run.py +
   * utils/run_utils.py): enumerate instance files under a directory, run
   * one localization algorithm per instance, score set-match F1 against
@@ -28,7 +24,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   *
   * Usage: Runner <algorithm> --run-path <dir> [--data-root data]
   *   [--n-threads 10] [--derived true|false] [--out results]
-  *   [--mode auto|batch|sequential] [--batch]
+  *   [--mode auto|batch|sequential]
   *   [--corpus <parquetDir>]   (instance_id-keyed parquet + _labels.tsv
   *                              sidecar instead of per-instance CSVs)
   * Algorithms: riskloc | adtributor | rev_rec_adtributor | autoroot |
@@ -65,24 +61,28 @@ object Runner {
     *    at 4.8M (geometric midpoint of the bracketing cells);
     *  - adtributor, hotspot: 10M — batch or par at every cell through
     *    4.8M (4.8x and 1.4x there), sequential at the 24M endpoint;
-    *  - squeeze: the 400k default — sequential from 480k up and ~3x at
-    *    24M (the lone batch-favoring 4.8M cell is an anomaly both
-    *    neighbors contradict; CROSSOVER.md discusses);
+    *  - squeeze: 400k — sequential from 480k up and ~3x at 24M (the
+    *    lone batch-favoring 4.8M cell is an anomaly both neighbors
+    *    contradict; CROSSOVER.md discusses);
     *  - rev_rec_adtributor: 0, always sequential — sequential wins every
     *    4-instance cell (48k, 480k, 4.8M; CROSSOVER.md revrec rows), and
     *    only `--mode batch` runs BatchRevRecAdtributor. */
-  val BatchCrossoverRows: Long = 400000L
   val BatchCrossoverByAlgo: Map[String, Long] = Map(
     "rev_rec_adtributor" -> 0L,
     "riskloc" -> Long.MaxValue,
     "autoroot" -> 4800000L,
     "robustspot" -> 1500000L,
     "adtributor" -> 10000000L,
-    "hotspot" -> 10000000L)
+    "hotspot" -> 10000000L,
+    "squeeze" -> 400000L)
 
-  /** Auto-dispatch rule (see [[BatchCrossoverRows]]). Uses the LARGEST
-    * instance, not the average: the batch DAG's corpus-wide passes are
-    * driven by the big instances riding along in the unioned frame.
+  /** Auto-dispatch rule (see [[BatchCrossoverByAlgo]]), printed as one
+    * `[runner] auto dispatch: …` line. Uses the LARGEST instance, not the
+    * average: the batch DAG's corpus-wide passes are driven by the big
+    * instances riding along in the unioned frame. The row count is only
+    * evaluated when the decision depends on it: a single instance or a 0
+    * threshold is sequential and a Long.MaxValue threshold is batch
+    * without it.
     *
     * Granularity: the non-corpus path resolves the mode ONCE for the whole
     * ref set, even though runBatch executes per (dataset, folder, attrs)
@@ -90,10 +90,20 @@ object Runner {
     * sequential. Deliberate: the shipped corpora are homogeneous per run,
     * and a per-group resolution would pay one count job per group before
     * any work starts. Revisit if mixed-size ref sets become a real path. */
-  def chooseMode(algorithm: String, maxRowsPerInstance: Long, nInstances: Int): String = {
-    val threshold = BatchCrossoverByAlgo.getOrElse(algorithm, BatchCrossoverRows)
-    if (nInstances <= 1 || maxRowsPerInstance >= threshold) "sequential"
-    else "batch"
+  def chooseMode(algorithm: String, maxRowsPerInstance: => Long, nInstances: Int): String = {
+    val threshold = BatchCrossoverByAlgo.getOrElse(algorithm,
+      throw new IllegalArgumentException(s"unknown algorithm: $algorithm"))
+    val (mode, why) =
+      if (nInstances <= 1) ("sequential", "single instance")
+      else if (threshold == 0L) ("sequential", "crossover 0")
+      else if (threshold == Long.MaxValue) ("batch", "crossover MaxValue")
+      else {
+        val rows = maxRowsPerInstance
+        (if (rows >= threshold) "sequential" else "batch",
+          s"maxRows/instance=$rows, crossover $threshold")
+      }
+    println(s"[runner] auto dispatch: $algorithm instances=$nInstances -> $mode ($why)")
+    mode
   }
 
   /** Load one instance's snapshot frame + ground-truth label. */
@@ -145,10 +155,95 @@ object Runner {
     * path (CROSSOVER.md, "In-process tier"). */
   val InProcessMaxLeaves: Int = 48000
 
+  private type Kernel = (LeafSnapshot, String => Unit) => Seq[String]
+
+  /** One algorithm with its flags parsed: the single-instance Spark run
+    * (frame, attributes, trace), the in-process kernel with the measures
+    * it reads, if the algorithm has one, and the whole-corpus Batch* run
+    * over an `instance_id`-keyed frame (no trace). */
+  private final case class Algorithm(
+      onSpark: (DataFrame, Seq[String], String => Unit) => Seq[String],
+      inProcess: Option[(Seq[String], Kernel)],
+      batch: (DataFrame, Seq[String]) => Map[String, Seq[String]])
+
+  /** The per-algorithm table. `opts`: the reference CLI's per-algorithm
+    * flags (utils/argument_parser.py:18-69) by their kebab-case names,
+    * e.g. "risk-threshold" -> "0.4", "teep" -> "0.05". */
+  private def algorithmFor(algorithm: String, derived: Boolean,
+      opts: Map[String, String]): Algorithm = {
+    def d(key: String, dflt: Double) = opts.get(key).map(_.toDouble).getOrElse(dflt)
+    def i(key: String, dflt: Int) = opts.get(key).map(_.toInt).getOrElse(dflt)
+    def b(key: String, dflt: Boolean) = opts.get(key).map(_.toBoolean).getOrElse(dflt)
+    val id = "instance_id"
+    algorithm match {
+      case "riskloc" =>
+        val o = RiskLoc.Options(
+          riskThreshold = d("risk-threshold", 0.5),
+          pepThreshold = d("pep-threshold", 0.02),
+          nRemove = i("n-remove", 5),
+          removeRelative = b("remove-relative", dflt = false),
+          pruneElements = b("prune-elements", dflt = true),
+          derived = derived)
+        Algorithm(
+          (df, attrs, t) => RiskLoc.predictions(RiskLoc.run(df, attrs, o.copy(trace = t))),
+          Some((LeafSnapshot.measureColumns(derived, withRatios = true),
+            (s, t) => RiskLoc.predictions(RiskLocKernel.run(s, o.copy(trace = t))))),
+          (u, attrs) => BatchRiskLoc.run(u, id, attrs, o).view.mapValues(RiskLoc.predictions).toMap)
+      case "adtributor" =>
+        val o = Adtributor.Options(
+          tep = d("tep", 0.1), teep = d("teep", 0.1), k = i("k", 3), derived = derived)
+        Algorithm(
+          (df, attrs, _) => Adtributor.predictions(Adtributor.run(df, attrs, o)),
+          Some((LeafSnapshot.measureColumns(derived, withRatios = false),
+            (s, _) => Adtributor.predictions(AdtributorKernel.adtributor(s, o)))),
+          (u, attrs) => BatchAdtributor.predictions(BatchAdtributor.run(u, id, attrs, o).collect()))
+      case "rev_rec_adtributor" =>
+        val o = RevRecAdtributor.Options(teep = d("teep", 0.2), k = i("k", 3), derived = derived)
+        Algorithm(
+          (df, attrs, t) =>
+            RevRecAdtributor.predictions(RevRecAdtributor.run(df, attrs, o.copy(trace = t))),
+          Some((LeafSnapshot.measureColumns(derived, withRatios = false),
+            (s, t) => RevRecAdtributor.predictions(AdtributorKernel.revRec(s, o.copy(trace = t))))),
+          (u, attrs) => BatchRevRecAdtributor.predictions(BatchRevRecAdtributor.run(u, id, attrs, o)))
+      case "autoroot" =>
+        val o = AutoRoot.Options(deltaThreshold = d("delta-threshold", 0.25))
+        Algorithm(
+          (df, attrs, _) => AutoRoot.predictions(AutoRoot.run(df, attrs, o)),
+          None,
+          (u, attrs) => BatchAutoRoot.run(u, id, attrs, o).view.mapValues(AutoRoot.predictions).toMap)
+      case "squeeze" =>
+        val o = Squeeze.Options(
+          psUpperBound = d("ps-upper-bound", 0.9),
+          maxNumElements = i("max-num-elements-single-cluster", 12),
+          derived = derived)
+        Algorithm(
+          (df, attrs, t) => Squeeze.run(df, attrs, o.copy(trace = t)),
+          None,
+          (u, attrs) => BatchSqueeze.run(u, id, attrs, o))
+      case "hotspot" =>
+        val o = HotSpot.Options(
+          pt = d("pt", 0.8), m = i("m", 200), scoring = opts.getOrElse("scoring", "gps"))
+        Algorithm(
+          (df, attrs, _) => HotSpot.predictions(HotSpot.run(df, attrs, o)),
+          None,
+          (u, attrs) => BatchHotSpot.predictions(BatchHotSpot.run(u, id, attrs, o)))
+      case "robustspot" =>
+        val o = RobustSpot.Options(
+          k = i("k", 3),
+          lambdaAmplification = i("lambda-amplification", 100),
+          caThreshold = d("contribution-ability-threshold", 0.0),
+          confidenceThreshold = d("confidence-threshold", 0.8),
+          derived = derived)
+        Algorithm(
+          (df, attrs, t) => RobustSpot.predictions(RobustSpot.run(df, attrs, o.copy(trace = t))),
+          None,
+          (u, attrs) => BatchRobustSpot.predictions(BatchRobustSpot.run(u, id, attrs, o)))
+      case other => throw new IllegalArgumentException(s"unknown algorithm: $other")
+    }
+  }
+
   /** One algorithm over one instance snapshot → canonical predictions.
-    * `opts`: the reference CLI's per-algorithm flags
-    * (utils/argument_parser.py:18-69) by their kebab-case names, e.g.
-    * "risk-threshold" -> "0.4", "teep" -> "0.05", "debug" -> "true".
+    * `opts`: the per-algorithm flags (see [[algorithmFor]]).
     *
     * riskloc, adtributor and rev_rec_adtributor first collect at most
     * `inProcessCap + 1` leaves; an instance of at most `inProcessCap`
@@ -159,59 +254,10 @@ object Runner {
       derived: Boolean, opts: Map[String, String],
       trace: String => Unit = _ => (),
       inProcessCap: Int = InProcessMaxLeaves): Seq[String] = {
-    def d(key: String, dflt: Double) = opts.get(key).map(_.toDouble).getOrElse(dflt)
-    def i(key: String, dflt: Int) = opts.get(key).map(_.toInt).getOrElse(dflt)
-    def b(key: String, dflt: Boolean) = opts.get(key).map(_.toBoolean).getOrElse(dflt)
-    type Kernel = (LeafSnapshot, String => Unit) => Seq[String]
-    // the Spark path, and the in-process kernel with the measures it reads
-    val (onSpark, inProcess): (() => Seq[String], Option[(Seq[String], Kernel)]) =
-      algorithm match {
-        case "riskloc" =>
-          val o = RiskLoc.Options(
-            riskThreshold = d("risk-threshold", 0.5),
-            pepThreshold = d("pep-threshold", 0.02),
-            nRemove = i("n-remove", 5),
-            removeRelative = b("remove-relative", dflt = false),
-            pruneElements = b("prune-elements", dflt = true),
-            derived = derived, trace = trace)
-          (() => RiskLoc.predictions(RiskLoc.run(df, attributes, o)),
-            Some((LeafSnapshot.measureColumns(derived, withRatios = true),
-              (s, t) => RiskLoc.predictions(RiskLocKernel.run(s, o.copy(trace = t))))))
-        case "adtributor" =>
-          val o = Adtributor.Options(
-            tep = d("tep", 0.1), teep = d("teep", 0.1), k = i("k", 3), derived = derived)
-          (() => Adtributor.predictions(Adtributor.run(df, attributes, o)),
-            Some((LeafSnapshot.measureColumns(derived, withRatios = false),
-              (s, _) => Adtributor.predictions(AdtributorKernel.adtributor(s, o)))))
-        case "rev_rec_adtributor" =>
-          val o = RevRecAdtributor.Options(teep = d("teep", 0.2), k = i("k", 3), derived = derived)
-          (() => RevRecAdtributor.predictions(RevRecAdtributor.run(df, attributes, o)),
-            Some((LeafSnapshot.measureColumns(derived, withRatios = false),
-              (s, t) => RevRecAdtributor.predictions(AdtributorKernel.revRec(s, o.copy(trace = t))))))
-        case "autoroot" =>
-          (() => AutoRoot.predictions(AutoRoot.run(df, attributes,
-            AutoRoot.Options(deltaThreshold = d("delta-threshold", 0.25)))), None)
-        case "squeeze" =>
-          (() => Squeeze.run(df, attributes, Squeeze.Options(
-            psUpperBound = d("ps-upper-bound", 0.9),
-            maxNumElements = i("max-num-elements-single-cluster", 12),
-            derived = derived, trace = trace)), None)
-        case "hotspot" =>
-          (() => HotSpot.predictions(HotSpot.run(df, attributes, HotSpot.Options(
-            pt = d("pt", 0.8), m = i("m", 200),
-            scoring = opts.getOrElse("scoring", "gps")))), None)
-        case "robustspot" =>
-          (() => RobustSpot.predictions(RobustSpot.run(df, attributes, RobustSpot.Options(
-            k = i("k", 3),
-            lambdaAmplification = i("lambda-amplification", 100),
-            caThreshold = d("contribution-ability-threshold", 0.0),
-            confidenceThreshold = d("confidence-threshold", 0.8),
-            derived = derived, trace = trace))), None)
-        case other => throw new IllegalArgumentException(s"unknown algorithm: $other")
-      }
+    val algo = algorithmFor(algorithm, derived, opts)
     def noRows() = throw new IllegalArgumentException("instance has no leaf rows")
 
-    val snapshot: Option[(LeafSnapshot, Kernel)] = inProcess match {
+    val snapshot: Option[(LeafSnapshot, Kernel)] = algo.inProcess match {
       case Some((measures, kernel)) if LeafSnapshot.kernelSchema(df, attributes, measures) =>
         val rows = LeafSnapshot.probe(df, attributes, measures, inProcessCap)
         if (rows.isEmpty) noRows()
@@ -228,75 +274,18 @@ object Runner {
       val lines = collection.mutable.ArrayBuffer.empty[String]
       try { val preds = kernel(s, lines.append(_)); lines.foreach(trace); Some(preds) }
       catch { case _: LeafSnapshot.Unsupported => None }
-    }.getOrElse(onSpark())
+    }.getOrElse(algo.onSpark(df, attributes, trace))
   }
 
-  /** One whole-corpus Batch* DAG over an instance-keyed frame →
+  /** One whole-corpus Batch* DAG over an `instance_id`-keyed frame →
     * per-instance canonical predictions. */
   def runBatchAlgorithm(union: DataFrame, attrs: Seq[String], algorithm: String,
-      derived: Boolean, opts: Map[String, String]): Map[String, Seq[String]] = {
-    def d(key: String, dflt: Double) = opts.get(key).map(_.toDouble).getOrElse(dflt)
-    def i(key: String, dflt: Int) = opts.get(key).map(_.toInt).getOrElse(dflt)
-    def b(key: String, dflt: Boolean) = opts.get(key).map(_.toBoolean).getOrElse(dflt)
-    algorithm match {
-      case "riskloc" =>
-        BatchRiskLoc.run(union, "instance_id", attrs, RiskLoc.Options(
-          riskThreshold = d("risk-threshold", 0.5),
-          pepThreshold = d("pep-threshold", 0.02),
-          nRemove = i("n-remove", 5),
-          removeRelative = b("remove-relative", dflt = false),
-          pruneElements = b("prune-elements", dflt = true),
-          derived = derived))
-          .view.mapValues(RiskLoc.predictions).toMap
-      case "adtributor" =>
-        val rows = BatchAdtributor.run(union, "instance_id", attrs,
-          Adtributor.Options(tep = d("tep", 0.1), teep = d("teep", 0.1),
-            k = i("k", 3), derived = derived)).collect()
-        rows.groupBy(r => r.getString(r.fieldIndex("instance_id")))
-          .view.mapValues { rs =>
-            graft.model.Labels.canonicalPredictions(
-              rs.sortBy(_.getInt(rs.head.fieldIndex("rank"))).toSeq.flatMap { r =>
-                val dim = r.getString(r.fieldIndex("dimension"))
-                r.getSeq[String](r.fieldIndex("elements")).map(e => s"$dim=$e")
-              })
-          }.toMap
-      case "autoroot" =>
-        BatchAutoRoot.run(union, "instance_id", attrs,
-            AutoRoot.Options(deltaThreshold = d("delta-threshold", 0.25)))
-          .view.mapValues(AutoRoot.predictions).toMap
-      case "squeeze" =>
-        BatchSqueeze.run(union, "instance_id", attrs, Squeeze.Options(
-          psUpperBound = d("ps-upper-bound", 0.9),
-          maxNumElements = i("max-num-elements-single-cluster", 12),
-          derived = derived))
-      case "hotspot" =>
-        BatchHotSpot.predictions(BatchHotSpot.run(union, "instance_id", attrs,
-          HotSpot.Options(pt = d("pt", 0.8), m = i("m", 200),
-            scoring = opts.getOrElse("scoring", "gps"))))
-      case "rev_rec_adtributor" =>
-        BatchRevRecAdtributor.run(union, "instance_id", attrs,
-            RevRecAdtributor.Options(teep = d("teep", 0.2), k = i("k", 3), derived = derived))
-          .view.mapValues(RevRecAdtributor.predictions).toMap
-      case "robustspot" =>
-        BatchRobustSpot.predictions(BatchRobustSpot.run(union, "instance_id", attrs,
-          RobustSpot.Options(k = i("k", 3),
-            lambdaAmplification = i("lambda-amplification", 100),
-            caThreshold = d("contribution-ability-threshold", 0.0),
-            confidenceThreshold = d("confidence-threshold", 0.8),
-            derived = derived)))
-      case other => throw new IllegalArgumentException(
-        s"algorithm has no batch variant: $other")
-    }
-  }
+      derived: Boolean, opts: Map[String, String]): Map[String, Seq[String]] =
+    algorithmFor(algorithm, derived, opts).batch(union, attrs)
 
   def runInstance(spark: SparkSession, dataRoot: String,
       ref: InstanceSource.InstanceRef, algorithm: String,
-      derivedFlag: Option[Boolean]): InstanceResult =
-    runInstance(spark, dataRoot, ref, algorithm, derivedFlag, Map.empty)
-
-  def runInstance(spark: SparkSession, dataRoot: String,
-      ref: InstanceSource.InstanceRef, algorithm: String,
-      derivedFlag: Option[Boolean], opts: Map[String, String]): InstanceResult = {
+      derivedFlag: Option[Boolean], opts: Map[String, String] = Map.empty): InstanceResult = {
     val (df, label, derived) = loadInstance(spark, dataRoot, ref, derivedFlag)
     val attributes = Snapshots.attributes(df)
     val trace: String => Unit =
@@ -330,14 +319,10 @@ object Runner {
     * concurrent job submission against one session). */
   def runAll(spark: SparkSession, dataRoot: String, refs: Seq[InstanceSource.InstanceRef],
       algorithm: String, derivedFlag: Option[Boolean], nThreads: Int,
-      opts: Map[String, String] = Map.empty): Seq[InstanceResult] = {
-    val pool = Executors.newFixedThreadPool(nThreads)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = refs.map(ref => Future(runInstance(spark, dataRoot, ref, algorithm, derivedFlag, opts)))
-      Await.result(Future.sequence(futures), Duration.Inf)
-    } finally pool.shutdown()
-  }
+      opts: Map[String, String] = Map.empty): Seq[InstanceResult] =
+    graft.core.Concurrency.awaitAll(
+      refs.map(ref => () => runInstance(spark, dataRoot, ref, algorithm, derivedFlag, opts)),
+      maxConcurrent = nThreads)
 
   /** Whole-corpus batch mode: instead of one driver-coordinated run per
     * instance, every instance becomes one key of a single instance-keyed
@@ -345,7 +330,7 @@ object Runner {
     * attribute-sequence) group — a fixed number of corpus-wide aggregation
     * passes per layer/round. This is the winning execution shape for
     * MANY SMALL instances (RS_SWEEP_BATCH.md: 4-9x over sequential at
-    * 0.1-11k rows/instance); above [[BatchCrossoverRows]] rows/instance
+    * 0.1-11k rows/instance); above [[BatchCrossoverByAlgo]] rows/instance
     * the concurrent sequential path wins instead (H_SCALE.md: 1.7-6x at
     * 24M rows/instance) — `--mode auto` picks per corpus. Predictions per
     * instance are pinned equal to the sequential path by the Batch*Specs. */
@@ -381,57 +366,62 @@ object Runner {
 
   /** Instance-keyed parquet corpus mode (`--corpus`): the 100 TB input
     * shape — one partitioned columnar table carrying every instance,
-    * ground truth in a `_labels.tsv` sidecar (instance_id TAB label).
-    * Sequential mode filters per instance off the shared scan; batch mode
-    * feeds the frame to the Batch* DAG as-is. */
+    * ground truth in a `_labels.tsv` sidecar (instance_id TAB label, one
+    * line per id; a repeated id is an error). */
   def runCorpus(spark: SparkSession, corpusDir: String, algorithm: String,
       mode: String, nThreads: Int,
       opts: Map[String, String] = Map.empty): Seq[InstanceResult] = {
-    import org.apache.spark.sql.functions.col
     val corpus = spark.read.parquet(corpusDir)
     val labels: Map[String, String] = {
       val f = new java.io.File(corpusDir, "_labels.tsv")
       if (!f.isFile) Map.empty
       else {
         val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().filter(_.nonEmpty).map { line =>
+        try src.getLines().filter(_.nonEmpty).foldLeft(Map.empty[String, String]) { (m, line) =>
           // split("\t", 2): Java split drops trailing empty fields, so an
           // empty label (or one containing a tab) must not crash the run
           val f = line.split("\t", 2)
           require(f.length == 2, s"malformed _labels.tsv line (no tab): '$line'")
-          f(0) -> f(1)
-        }.toMap
+          require(!m.contains(f(0)), s"duplicate instance id in _labels.tsv: '${f(0)}'")
+          m.updated(f(0), f(1))
+        }
         finally src.close()
       }
     }
+    val preds = runKeyed(corpus, algorithm, mode, nThreads, opts)
+    (preds.keySet ++ labels.keySet).toSeq.sorted.map { id =>
+      val (predictions, seconds) = preds.getOrElse(id, (Seq.empty, 0.0))
+      val s = Evaluation.score(predictions, labels.getOrElse(id, ""))
+      InstanceResult("corpus", corpusDir, id, s.f1, s.tp, s.fp, s.fn, seconds)
+    }
+  }
+
+  /** One algorithm over an `instance_id`-keyed frame → per instance id,
+    * canonical predictions and seconds. `mode` "auto" resolves through
+    * [[chooseMode]] from one per-instance count job. Sequential mode
+    * filters each instance off the shared frame and runs [[runAlgorithm]]
+    * on up to `nThreads` instances at a time, each timed alone; batch
+    * mode feeds the frame to the Batch* DAG as-is and splits its wall
+    * evenly over the instances it returns. The "derived" flag reads as
+    * false when absent. */
+  def runKeyed(corpus: DataFrame, algorithm: String, mode: String, nThreads: Int,
+      opts: Map[String, String] = Map.empty): Map[String, (Seq[String], Double)] = {
+    import org.apache.spark.sql.functions.{col, count, lit, max}
     val attrs = Snapshots.attributes(corpus.drop("instance_id"))
     val derived = opts.get("derived").exists(_.toBoolean)
-
     val resolvedMode =
       if (mode != "auto") mode
       else {
         val perInst = corpus.groupBy(col("instance_id")).count()
-          .agg(org.apache.spark.sql.functions.max("count"),
-            org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))
-          .head()
-        require(!perInst.isNullAt(0), s"empty corpus at $corpusDir")
-        val (maxRows, n) = (perInst.getLong(0), perInst.getLong(1).toInt)
-        val m = chooseMode(algorithm, maxRows, n)
-        println(s"[runner] auto dispatch: maxRows/instance=$maxRows instances=$n -> $m " +
-          s"(crossover ${BatchCrossoverByAlgo.getOrElse(algorithm, BatchCrossoverRows)})")
-        m
+          .agg(max("count"), count(lit(1))).head()
+        require(!perInst.isNullAt(0), "empty corpus")
+        chooseMode(algorithm, perInst.getLong(0), perInst.getLong(1).toInt)
       }
-
     if (resolvedMode == "batch") {
       val t0 = System.nanoTime()
       val preds = runBatchAlgorithm(corpus, attrs, algorithm, derived, opts)
-      val n = math.max(preds.size, labels.size)
-      val perCase = (System.nanoTime() - t0) / 1e9 / math.max(n, 1)
-      (preds.keySet ++ labels.keySet).toSeq.sorted.map { id =>
-        val s = Evaluation.score(preds.getOrElse(id, Seq.empty),
-          labels.getOrElse(id, ""))
-        InstanceResult("corpus", corpusDir, id, s.f1, s.tp, s.fp, s.fn, perCase)
-      }
+      val perCase = (System.nanoTime() - t0) / 1e9 / math.max(preds.size, 1)
+      preds.view.mapValues(p => (p, perCase)).toMap
     } else {
       val ids = corpus.select(col("instance_id").cast("string")).distinct()
         .collect().map(_.getString(0)).sorted.toSeq
@@ -440,15 +430,13 @@ object Runner {
           val df = corpus.filter(col("instance_id") === id).drop("instance_id")
           val t0 = System.nanoTime()
           val predictions = runAlgorithm(df, attrs, algorithm, derived, opts)
-          val seconds = (System.nanoTime() - t0) / 1e9
-          val s = Evaluation.score(predictions, labels.getOrElse(id, ""))
-          InstanceResult("corpus", corpusDir, id, s.f1, s.tp, s.fp, s.fn, seconds)
-        }, maxConcurrent = nThreads)
+          id -> (predictions, (System.nanoTime() - t0) / 1e9)
+        }, maxConcurrent = nThreads).toMap
     }
   }
 
   /** The reference's CLI name for the recursive variant is accepted too. */
-  private def canonicalAlgorithm(name: String): String =
+  def canonicalAlgorithm(name: String): String =
     if (name == "r_adtributor") "rev_rec_adtributor" else name
 
   def main(args: Array[String]): Unit = {
@@ -472,12 +460,7 @@ object Runner {
     val nThreads = opts.getOrElse("n-threads", "10").toInt
     val derivedFlag = opts.get("derived").map(_.toBoolean)
     val out = opts.getOrElse("out", "results")
-    // --mode wins; legacy --batch [true|false] maps to batch/sequential
-    val mode = opts.get("mode").getOrElse(
-      opts.get("batch") match {
-        case Some(v) => if (v.toBoolean) "batch" else "sequential"
-        case None => "auto"
-      })
+    val mode = opts.getOrElse("mode", "auto")
     require(Set("auto", "batch", "sequential")(mode), s"bad --mode $mode")
 
     val spark = graft.core.Sessions.local(s"graft-run-$algorithm")
@@ -491,25 +474,8 @@ object Runner {
         require(refs.nonEmpty, s"no instances under $dataRoot/$runPath")
         val resolvedMode =
           if (mode != "auto") mode
-          // short-circuit the largest-instance count job when the decision
-          // cannot depend on it: a single instance or a 0 threshold
-          // (rev_rec_adtributor) is always sequential; a Long.MaxValue
-          // threshold (riskloc) always batches for n > 1
-          else if (refs.size <= 1 || BatchCrossoverByAlgo.get(algorithm).contains(0L))
-            "sequential"
-          else if (BatchCrossoverByAlgo.getOrElse(algorithm,
-              BatchCrossoverRows) == Long.MaxValue) {
-            println(s"[runner] auto dispatch: instances=${refs.size} -> batch " +
-              "(crossover MaxValue — no count job needed)")
-            "batch"
-          } else {
-            val maxRows = estimateMaxRowsPerInstance(spark, dataRoot, refs, derivedFlag)
-            val m = chooseMode(algorithm, maxRows, refs.size)
-            println(s"[runner] auto dispatch: maxRows/instance=$maxRows " +
-              s"instances=${refs.size} -> $m " +
-              s"(crossover ${BatchCrossoverByAlgo.getOrElse(algorithm, BatchCrossoverRows)})")
-            m
-          }
+          else chooseMode(algorithm,
+            estimateMaxRowsPerInstance(spark, dataRoot, refs, derivedFlag), refs.size)
         if (resolvedMode == "batch")
           runBatch(spark, dataRoot, refs, algorithm, derivedFlag, opts)
         else runAll(spark, dataRoot, refs, algorithm, derivedFlag, nThreads, opts)

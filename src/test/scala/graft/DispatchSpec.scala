@@ -11,14 +11,16 @@ import java.nio.file.Files
   *  - the rule: many small instances -> batch; any corpus whose largest
   *    instance reaches the measured crossover -> sequential; a single
   *    instance -> sequential (nothing to amortize);
+  *  - the row count is evaluated only when the decision depends on it;
   *  - runCorpus end-to-end in both modes on a toy H corpus with the
-  *    _labels.tsv sidecar: same F1, causes found.
+  *    _labels.tsv sidecar: same F1, causes found; a repeated sidecar id
+  *    is an error.
   */
 class DispatchSpec extends AnyFunSuite {
-  private val spark = TestSpark.spark
+  private lazy val spark = TestSpark.spark
 
   test("chooseMode dispatches by rows/instance and instance count") {
-    val t = Runner.BatchCrossoverRows
+    val t = Runner.BatchCrossoverByAlgo("squeeze")
     assert(Runner.chooseMode("squeeze", 1000, 135) == "batch") // RS shape
     assert(Runner.chooseMode("hotspot", 48000, 200) == "batch") // S protocol shape
     assert(Runner.chooseMode("autoroot", 24000000, 100) == "sequential") // H protocol shape
@@ -42,6 +44,17 @@ class DispatchSpec extends AnyFunSuite {
     assert(Runner.chooseMode("adtributor", 100, 1) == "sequential") // nothing to amortize
   }
 
+  test("chooseMode evaluates the row count only when the decision needs it") {
+    def never: Long = throw new AssertionError("row count evaluated")
+    assert(Runner.chooseMode("squeeze", never, 1) == "sequential") // single instance
+    assert(Runner.chooseMode("riskloc", never, 1) == "sequential")
+    assert(Runner.chooseMode("rev_rec_adtributor", never, 100) == "sequential") // crossover 0
+    assert(Runner.chooseMode("riskloc", never, 100) == "batch") // crossover MaxValue
+    var evaluated = 0
+    assert(Runner.chooseMode("squeeze", { evaluated += 1; 1000L }, 100) == "batch")
+    assert(evaluated == 1)
+  }
+
   test("runCorpus localizes a labeled parquet corpus in both modes") {
     val dims = Seq("a" -> 4, "b" -> 3, "c" -> 5, "d" -> 4)
     val dir = Files.createTempDirectory("graft-dispatch").toString
@@ -63,5 +76,16 @@ class DispatchSpec extends AnyFunSuite {
     // auto mode on a toy corpus (240-960 rows/instance) must pick batch
     val auto = Runner.runCorpus(spark, dir, "adtributor", "auto", nThreads = 3)
     assert(auto.sortBy(_.file).map(r => r.file -> r.f1) == batF1)
+  }
+
+  test("runCorpus rejects a repeated instance id in _labels.tsv") {
+    val dims = Seq("a" -> 4, "b" -> 3, "c" -> 5, "d" -> 4)
+    val dir = Files.createTempDirectory("graft-dup-labels").toString
+    HCorpus.corpus(spark, 2, dims).write.mode("overwrite").parquet(dir)
+    val id = HCorpus.labels(2, dims).keys.min
+    Files.writeString(java.nio.file.Paths.get(dir, "_labels.tsv"), s"$id\ta=a1\n$id\tb=b1\n")
+    val e = intercept[IllegalArgumentException](
+      Runner.runCorpus(spark, dir, "adtributor", "sequential", nThreads = 2))
+    assert(e.getMessage.contains(s"'$id'"), e.getMessage)
   }
 }

@@ -95,14 +95,18 @@ class RunnerSpec extends AnyFunSuite {
 
   test("--batch whole-corpus mode matches per-instance results") {
     val refs = InstanceSource.instances(corpusRoot, "")
-    for (algo <- Seq("riskloc", "adtributor", "squeeze", "autoroot", "hotspot",
-        "rev_rec_adtributor")) {
+    // the defaults, then non-default flags: both paths must read the same ones
+    val nonDefault = Map("risk-threshold" -> "0.3", "tep" -> "0.2", "k" -> "2",
+      "delta-threshold" -> "0.1", "pt" -> "0.7")
+    for (opts <- Seq(Map.empty[String, String], nonDefault);
+        algo <- Seq("riskloc", "adtributor", "squeeze", "autoroot", "hotspot",
+          "rev_rec_adtributor", "robustspot")) {
       val seq = refs.map(r =>
-          Runner.runInstance(spark, corpusRoot, r, algo, derivedFlag = Some(false)))
+          Runner.runInstance(spark, corpusRoot, r, algo, derivedFlag = Some(false), opts))
         .map(r => (r.file, r.tp, r.fp, r.fn)).sortBy(_._1)
-      val batch = Runner.runBatch(spark, corpusRoot, refs, algo, derivedFlag = Some(false))
+      val batch = Runner.runBatch(spark, corpusRoot, refs, algo, derivedFlag = Some(false), opts)
         .map(r => (r.file, r.tp, r.fp, r.fn)).sortBy(_._1)
-      assert(batch == seq, algo)
+      assert(batch == seq, s"$algo $opts")
     }
   }
 
