@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Golden values from running the reference adtributor
   * (algorithms/adtributor.py) on the sf0.001 lineitem-part snapshot
   * (attrs rf/ls/brand, real=extendedprice, predict=discounted price). */
-class AdtributorSpec extends AnyFunSuite {
+class AdtributorSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private lazy val snap = ScoreQueries.snapshot(spark, TestSpark.sfDir)
     .withColumnRenamed("vreal", "real").withColumnRenamed("vpred", "predict")

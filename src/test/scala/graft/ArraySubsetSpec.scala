@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * forall(a, v => array_contains(b, v)) — the AutoRoot candidate-join
   * residual it replaced — including three-valued logic on null elements,
   * so selection masks (and the RS corpus goldens) are unchanged. */
-class ArraySubsetSpec extends AnyFunSuite {
+class ArraySubsetSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

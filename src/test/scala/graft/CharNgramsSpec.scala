@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * formulation it replaced in TextAnalysis.charNgrams — same 1-based
   * codepoint windows, same short-string single n-gram — so trained
   * n-gram profiles (and q62's predictions) are unchanged. */
-class CharNgramsSpec extends AnyFunSuite {
+class CharNgramsSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * succeed — no interpreted fallback) with whole-stage fallback off. A
   * doGenCode regression that silently fell back to interpreted eval
   * would pass the parity specs but fail here. */
-class CodegenOnlySpec extends AnyFunSuite {
+class CodegenOnlySpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

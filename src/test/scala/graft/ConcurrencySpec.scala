@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * concurrency, and all tasks settle before the first failure (in task
   * order) is rethrown — no detached siblings keep running after the
   * caller unwinds. */
-class ConcurrencySpec extends AnyFunSuite {
+class ConcurrencySpec extends AnyFunSuite with TestTimeLimit {
 
   test("results come back in task order") {
     val got = Concurrency.awaitAll((1 to 8).map(i => () => {

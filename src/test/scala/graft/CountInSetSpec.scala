@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** CountInSetExpr (codegen count_in_set) must match
   * size(filter(arr, w => w.isin(set))) — the stopword-ratio hot path it
   * replaced — on non-null arrays, so q52's quality scores are unchanged. */
-class CountInSetSpec extends AnyFunSuite {
+class CountInSetSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with the injection_info.csv metadata the generator wrote for the same
   * files (generate_dataset.py:203-229 records exactly these quantities,
   * rounded to 2dp). Closing the loop generator -> files -> analyzer. */
-class DatasetStatisticsSpec extends AnyFunSuite {
+class DatasetStatisticsSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
 

@@ -16,7 +16,7 @@ import java.nio.file.Files
   *    _labels.tsv sidecar: same F1, causes found; a repeated sidecar id
   *    is an error.
   */
-class DispatchSpec extends AnyFunSuite {
+class DispatchSpec extends AnyFunSuite with TestTimeLimit {
   private lazy val spark = TestSpark.spark
 
   test("chooseMode dispatches by rows/instance and instance count") {

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * raised by `Runner.runAlgorithm` before any algorithm runs (RiskLoc
   * used to die on `empty.max` inside its cutoff, the others returned
   * nothing). */
-class EmptyInstanceSpec extends AnyFunSuite {
+class EmptyInstanceSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   test("runAlgorithm rejects an instance with no leaf rows, for all seven algorithms") {

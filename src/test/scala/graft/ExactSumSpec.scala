@@ -3,7 +3,7 @@ package graft
 import graft.kernels.ExactSum
 import org.scalatest.funsuite.AnyFunSuite
 
-class ExactSumSpec extends AnyFunSuite {
+class ExactSumSpec extends AnyFunSuite with TestTimeLimit {
 
   private def exactViaBigDecimal(vs: Seq[Double]): Double = {
     if (vs.isEmpty) return 0.0

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Replays the reference implementation's outputs (goldens produced by
   * tools/make_fixtures.py running /root/reference code on seeded synthetic
   * snapshots) against the Spark engine. */
-class FixtureSpec extends AnyFunSuite {
+class FixtureSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val fixturesDir = getClass.getResource("/fixtures").getPath
 

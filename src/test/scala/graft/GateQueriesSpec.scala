@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every gate query must run on sf0.001 and be deterministic (the driver
   * hash-compares results against DuckDB). */
-class GateQueriesSpec extends AnyFunSuite {
+class GateQueriesSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   test("query names are unique and every oracle key has a query") {

@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * high-water is asserted only there: in the shared test JVM other
   * suites' garbage would dominate the probe.
   */
-class HScaleSpec extends AnyFunSuite {
+class HScaleSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   private val dims = Seq("a" -> 4, "b" -> 3, "c" -> 5, "d" -> 4)

@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.algorithms.HotSpot.{ElemStats, Totals}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * under a fixed seed. Exact-set goldens are not used: the reference's
   * MCTS draws from an unseeded RNG and iterates python sets, so only
   * score-threshold behavior is specified (SURVEY.md §7.3). */
-class HotSpotSpec extends AnyFunSuite {
+class HotSpotSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   // tiny leaf table: 3 elements of cuboid [d], 2 leaves each

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * size(array_intersect)/size(array_union) formulation it replaced in
   * Dedup.jaccard — same dedup, same null-element membership, same
   * union-0 guard, same null-array propagation. */
-class JaccardSimSpec extends AnyFunSuite {
+class JaccardSimSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** JobTrace's busy time is the union of the job intervals, so concurrent
   * jobs are not counted twice and busy never exceeds the wall. */
-class JobTraceSpec extends AnyFunSuite {
+class JobTraceSpec extends AnyFunSuite with TestTimeLimit {
 
   test("disjoint intervals add up, in any order") {
     assert(unionLength(Seq((20L, 25L), (0L, 10L))) == 15L)

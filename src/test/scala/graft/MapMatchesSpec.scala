@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the BatchRevRecAdtributor frontier residual it replaced — including
   * three-valued logic on absent keys, so node fan-out (and the
   * generated-corpus goldens) is unchanged. */
-class MapMatchesSpec extends AnyFunSuite {
+class MapMatchesSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (genrand_res53) must be bit-exact, including multi-word and huge
   * integer seeds. Fixture values generated with the container's
   * python3. */
-class MersenneTwisterSpec extends AnyFunSuite {
+class MersenneTwisterSpec extends AnyFunSuite with TestTimeLimit {
 
   private val pinned: Seq[(BigInt, Seq[Double])] = Seq(
     BigInt(0) -> Seq(0.8444218515250481, 0.7579544029403025, 0.420571580830845, 0.25891675029296335),

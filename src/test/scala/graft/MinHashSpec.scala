@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * same seeded coefficients, same 64-bit wraparound, same pmod, same
   * array_min null/empty semantics — so every committed LSH golden digest
   * is unchanged. */
-class MinHashSpec extends AnyFunSuite {
+class MinHashSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

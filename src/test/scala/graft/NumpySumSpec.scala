@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** NumpySum must reproduce pandas/numpy float64 summation bit-for-bit
   * (fixtures/npsum_golden.tsv; hex doubles from the container's pandas). */
-class NumpySumSpec extends AnyFunSuite {
+class NumpySumSpec extends AnyFunSuite with TestTimeLimit {
 
   private def parseHex(t: String): Double =
     if (t == "nan") Double.NaN else {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * similarity search (brute force / LSH / IVF), text analysis, and the
   * multimodal plumbing. Approximate structures are validated against their
   * exact counterparts (recall), not golden outputs. */
-class PipelineOpsSpec extends AnyFunSuite {
+class PipelineOpsSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

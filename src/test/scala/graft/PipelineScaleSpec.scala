@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * The full-size run (2M docs / 1M vectors) runs out-of-band via
   * `runMain graft.runner.PipelineScale` and its committed
   * PIPELINE_SCALE.md. */
-class PipelineScaleSpec extends AnyFunSuite {
+class PipelineScaleSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   test("pipeline operators keep their contracts on the planted corpus") {

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * codec, F1 evaluation, and numeric kernels that must hold for ALL
   * inputs, not just the golden fixtures. Cases are drawn deterministically
   * (fixed seed) so failures reproduce. */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with TestTimeLimit {
 
   private def forAll[A](gen: Gen[A], n: Int = 100)(f: A => Unit): Unit = {
     var seed = Seed(42L)

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * length(text) - length(regexp_replace(text, "[^a-zA-Z0-9 ]", "")) —
   * the punctRatio hot path it replaced — including multibyte codepoints
   * (every non-ASCII codepoint matches the negated class and counts once). */
-class PunctCountSpec extends AnyFunSuite {
+class PunctCountSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

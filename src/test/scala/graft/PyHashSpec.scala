@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
   * tuple hashes and `list(set(rules))` iteration order; NumpyArgsort must
   * reproduce np.argsort(kind='quicksort') index-for-index (goldens from
   * tools/make_pyhash_golden.py). */
-class PyHashSpec extends AnyFunSuite {
+class PyHashSpec extends AnyFunSuite with TestTimeLimit {
 
   private val mapper = new ObjectMapper
 

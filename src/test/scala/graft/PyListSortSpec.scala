@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** PyListSort must reproduce CPython 3.11 `list.sort()` bit-for-bit on
   * NaN-laced float lists (fixtures/pysort_golden.tsv — 316 cases covering
   * binarysort, powersort merges and galloping under the non-total `<`). */
-class PyListSortSpec extends AnyFunSuite {
+class PyListSortSpec extends AnyFunSuite with TestTimeLimit {
 
   private def parse(s: String): Array[Double] =
     if (s.isEmpty) Array.empty

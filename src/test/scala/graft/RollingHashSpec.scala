@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fold it replaced in TextAnalysis.rollingFingerprint — same codepoint
   * segmentation, same 64-bit wraparound before pmod, same empty-string
   * zero — so q59's committed fingerprint golden is unchanged. */
-class RollingHashSpec extends AnyFunSuite {
+class RollingHashSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

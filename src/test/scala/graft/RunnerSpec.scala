@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
 /** End-to-end runner lifecycle: generator → CSV corpus on disk → walker →
   * per-instance algorithm run → F1 evaluation → summary (the reference's
   * run.py flow). */
-class RunnerSpec extends AnyFunSuite {
+class RunnerSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   private lazy val corpusRoot: String = {

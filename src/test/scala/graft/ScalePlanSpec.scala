@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the hot paths. These assertions pin the plan shape that survives a
   * 100x scale-up; a regression here is a performance bug even while
   * results stay correct. */
-class ScalePlanSpec extends AnyFunSuite {
+class ScalePlanSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 

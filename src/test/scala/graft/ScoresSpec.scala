@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Golden values generated from the reference formulas
   * (utils/element_scores.py) on real=[100,200,50,0], predict=[80,150,60,0].
   */
-class ScoresSpec extends AnyFunSuite {
+class ScoresSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

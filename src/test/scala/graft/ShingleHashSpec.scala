@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * concat_ws join (nulls skipped), same short-array single shingle, same
   * xxhash64 seed, same first-occurrence dedup — so LSH candidates,
   * Jaccard verification, and golden digests are unchanged. */
-class ShingleHashSpec extends AnyFunSuite {
+class ShingleHashSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

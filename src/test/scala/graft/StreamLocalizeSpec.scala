@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dataset's 24M rows) runs out-of-band via `runMain
   * graft.runner.StreamLocalize` and its committed STREAM_LOCALIZE.md.
   */
-class StreamLocalizeSpec extends AnyFunSuite {
+class StreamLocalizeSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   test("per-window stream localization matches batch engine") {

@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dataset's 24M rows) runs out-of-band via `runMain
   * graft.runner.StreamScale` and its committed STREAM_SCALE.md.
   */
-class StreamScaleSpec extends AnyFunSuite {
+class StreamScaleSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   test("streamed snapshots match batch and state stays bounded") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Structured-Streaming trailing forecast: the windowed aggregate must
   * reproduce the batch RS forecast semantics (mean of the previous 4
   * minutes per leaf) for completed windows. */
-class StreamingForecastSpec extends AnyFunSuite {
+class StreamingForecastSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

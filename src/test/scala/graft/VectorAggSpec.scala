@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** collect_vector TypedImperativeAggregate: content parity with
   * collect_list, null skipping, grouped use, and serialization across
   * partial-aggregation shuffles. */
-class VectorAggSpec extends AnyFunSuite {
+class VectorAggSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** DotProduct (codegen vec_dot) must be bit-identical to the
   * higher-order-function formulation it replaced in Similarity.dot —
   * same widening, same left-to-right summation, same null semantics. */
-class VectorOpsSpec extends AnyFunSuite {
+class VectorOpsSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   import spark.implicits._
 

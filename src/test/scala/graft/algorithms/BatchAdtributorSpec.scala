@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.gen.DatasetGenerator
 import graft.model.Element
 import org.apache.spark.sql.functions._
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** BatchAdtributor (all instances in one DAG) must reproduce the
   * per-instance Adtributor exactly — per-instance semantics do not change
   * because the corpus shares one plan. */
-class BatchAdtributorSpec extends AnyFunSuite {
+class BatchAdtributorSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   private val dims = Seq(("a", 5), ("b", 4), ("c", 3))

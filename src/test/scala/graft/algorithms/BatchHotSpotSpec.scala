@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.InstanceSource
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sequential order), while running two aggregation passes per layer
   * for the entire corpus instead of per instance. Covers both scoring
   * functions — 'ps' also exercises hierarchical pruning. */
-class BatchHotSpotSpec extends AnyFunSuite {
+class BatchHotSpotSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
 

@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.{InstanceSource, RsLabels, RsSource}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * mode) run on the committed RS-format fixture `rs_synth/`
   * (tools/make_rs_synth.py, FIXTURES.md §8), and again on the reference's
   * real RS cases wherever that tree is mounted. */
-class BatchRevRecAdtributorSpec extends AnyFunSuite {
+class BatchRevRecAdtributorSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
   private val fixtureDir = "src/test/resources/rs_synth"

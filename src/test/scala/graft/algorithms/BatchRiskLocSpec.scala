@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.InstanceSource
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sequential per-instance RiskLoc.run — same causes, same discovery
   * order — while running a bounded number of Spark jobs per global
   * iteration instead of per instance. */
-class BatchRiskLocSpec extends AnyFunSuite {
+class BatchRiskLocSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
 

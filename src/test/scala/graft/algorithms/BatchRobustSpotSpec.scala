@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.{InstanceSource, RsLabels, RsSource}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -24,7 +24,7 @@ import scala.collection.mutable.ArrayBuffer
   * the reference's real RS cases runs wherever that tree is mounted.
   * Four generated files also run under hostile instance ids, through
   * both rounds-1-6 shapes (fused and concurrent chains). */
-class BatchRobustSpotSpec extends AnyFunSuite {
+class BatchRobustSpotSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
   private val fixtureDir = "src/test/resources/rs_synth"

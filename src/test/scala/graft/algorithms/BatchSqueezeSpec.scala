@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.InstanceSource
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Squeeze.run prediction strings, while running two Spark
   * aggregation passes per layer for the entire corpus instead of per
   * instance. */
-class BatchSqueezeSpec extends AnyFunSuite {
+class BatchSqueezeSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
 

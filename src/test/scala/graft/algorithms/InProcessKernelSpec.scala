@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.eval.Evaluation
 import graft.model.Labels
 import graft.runner.Runner
@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * multi-character dimension names, derived measures, several input
   * partitions and zero, NaN and ±Inf measures. Through
   * `Runner.runAlgorithm` a kernel call costs one Spark job. */
-class InProcessKernelSpec extends AnyFunSuite {
+class InProcessKernelSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val fixturesDir = getClass.getResource("/fixtures").getPath
   private val corpusDir = "src/test/resources/gen_corpus"

@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.{InstanceSource, RsLabels, RsSource}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * full trace stream (knee vectors, modes, per-round top-5, final
   * entries) must be identical, sequentially and batched, since the
   * mining arithmetic is exact integer/IEEE work either way. */
-class RobustSpotDriverMineSpec extends AnyFunSuite {
+class RobustSpotDriverMineSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
 

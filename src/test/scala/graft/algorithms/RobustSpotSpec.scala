@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.RsSource
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 /** RobustSpot vs the reference golden (tools/make_fixtures.py, fixture3 —
   * derived failure-rate KPI with a composite anomaly), plus the RS raw
   * time-series ingest (utils/robustspot_data_utils.py semantics). */
-class RobustSpotSpec extends AnyFunSuite {
+class RobustSpotSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   private val schema = StructType(Seq(

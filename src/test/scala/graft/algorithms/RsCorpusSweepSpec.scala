@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.runner.RsSweep
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * This spec replays a fixed 12-case stratified subset per algorithm
   * (~2 min) so the parity contract is exercised on every test run.
   */
-class RsCorpusSweepSpec extends AnyFunSuite {
+class RsCorpusSweepSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val rsDir = "/root/reference/data/RS"
   private val goldenPath = "src/test/resources/fixtures/rs_corpus_golden.tsv"

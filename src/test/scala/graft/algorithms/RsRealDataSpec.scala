@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.{RsLabels, RsSource}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (generated via run_utils.read_dataframe + robustspot, k=3,
   * derived=True; stable across PYTHONHASHSEED 0 and 777). Skipped when
   * the reference tree is not mounted. */
-class RsRealDataSpec extends AnyFunSuite {
+class RsRealDataSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val rsDir = "/root/reference/data/RS"
 

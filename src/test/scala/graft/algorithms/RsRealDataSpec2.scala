@@ -1,13 +1,13 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.sources.{RsLabels, RsSource}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** AutoRoot and Squeeze on the real RS corpus (case55, 11k rows), vs the
   * reference implementation's exact output on the same file (autoroot
   * delta_threshold=0.25; squeeze on the a/b pair with the divide op). */
-class RsRealDataSpec2 extends AnyFunSuite {
+class RsRealDataSpec2 extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val rsDir = "/root/reference/data/RS"
   private val caseName = "case55_0215_1861606916"

@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * thread interleaving. RefTrace output is diffed line-by-line
   * against the reference's debug output; nondeterministic order would
   * make those diffs spuriously fail. */
-class TraceDeterminismSpec extends AnyFunSuite {
+class TraceDeterminismSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
 
   private val schema1 = StructType(Seq(

@@ -1,6 +1,6 @@
 package graft.gen
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.algorithms._
 import graft.eval.Evaluation
 import graft.model.Labels
@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the VERDICT asked for: generated labels round-trip, and engine F1 on
   * generator output equals the reference's.
   */
-class GenCorpusSpec extends AnyFunSuite {
+class GenCorpusSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val corpusDir = "src/test/resources/gen_corpus"
   private val goldenPath = "src/test/resources/fixtures/gen_corpus_golden.tsv"

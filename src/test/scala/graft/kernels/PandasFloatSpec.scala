@@ -1,11 +1,12 @@
 package graft.kernels
 
+import graft.TestTimeLimit
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PandasFloat must reproduce pandas' precise_xstrtod bit-for-bit on the
   * committed golden (1000+ tokens read through the container's actual
   * pd.read_csv — tools/make_pandasfloat_golden.py). */
-class PandasFloatSpec extends AnyFunSuite {
+class PandasFloatSpec extends AnyFunSuite with TestTimeLimit {
 
   private lazy val golden: Seq[(String, String)] = {
     val src = scala.io.Source.fromFile(

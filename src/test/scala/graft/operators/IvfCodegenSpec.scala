@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.core.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * generated method with nlist x dim literals toward Janino's 64KB
   * limit). Also pins that the expression-based assignment is numerically
   * identical to the literal-array formulation it replaced. */
-class IvfCodegenSpec extends AnyFunSuite {
+class IvfCodegenSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 

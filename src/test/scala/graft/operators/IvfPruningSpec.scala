@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import graft.core.Tables
 import org.apache.spark.sql.execution.FileSourceScanLike
 import org.apache.spark.sql.functions._
@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * than the total cell count. Also pins result parity with the
   * recompute-assignment [[Similarity.ivfTopK]] path.
   */
-class IvfPruningSpec extends AnyFunSuite {
+class IvfPruningSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 

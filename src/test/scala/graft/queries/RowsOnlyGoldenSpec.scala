@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.TestSpark
+import graft.{TestSpark, TestTimeLimit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every rows-only gate query (no DuckDB oracle) is pinned to a committed
@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sf0.01 is asserted on every run; the sf0.01 re-execution belt is
   * env-gated (`GRAFT_GOLDEN_SFS=sf0.01 sbt test`) so the default suite
   * stays fast — run it before shipping a change to any gate query. */
-class RowsOnlyGoldenSpec extends AnyFunSuite {
+class RowsOnlyGoldenSpec extends AnyFunSuite with TestTimeLimit {
   private val spark = TestSpark.spark
   private val sf = "sf0.001"
   private lazy val golden =
