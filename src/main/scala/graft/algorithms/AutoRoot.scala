@@ -95,8 +95,6 @@ object AutoRoot {
     val (nTotal, tTermB) = (nTotalAny, tTermBAny)
 
     val clusters = clusterSizes.keys.toSeq.sorted
-    // best candidate per cluster, chosen across layers by avg score
-    val best = collection.mutable.Map.empty[Int, (Double, RootCause)]
 
     // Layers are independent given the cluster assignment; only the
     // best-split update is order-sensitive (strict >, earlier layer wins
@@ -128,7 +126,7 @@ object AutoRoot {
         if (!lastLayerOk) lit(false)
         else (col(s"x_$k") / z > opt.deltaThreshold) &&
           (col(s"x_$k").cast("double") / col("y") > opt.deltaThreshold)
-      }.reduce(_ || _)
+      }.reduce(_ || _) // isCandidate for some cluster
       val cands = counts.filter(candCond).persist(StorageLevel.MEMORY_AND_DISK)
 
       // try/finally: a failing pass must not leave counts/cands cached for
@@ -181,61 +179,81 @@ object AutoRoot {
         cands.join(stats1, Seq("cid", "key")).join(stats2, Seq("cid", "key"))
           .collect()
         }
-      (layer, cuboids, rows)
+      (layer, rows.toSeq.map(r => Candidate(r.getInt(0), r.getSeq[String](1),
+        r.getLong(r.fieldIndex("y")), clusters.map(k => k -> r.getLong(r.fieldIndex(s"x_$k"))).toMap,
+        r.getLong(r.fieldIndex("n_sel")), r.getDouble(r.fieldIndex("sum_b")),
+        r.getDouble(r.fieldIndex("a")))))
       } finally { cands.unpersist(); counts.unpersist() }
       } })
     catch { case e: Throwable =>
       // failing layer pass: drop the session-wide cached frames too
       withCluster.unpersist(); df.unpersist(); throw e }
 
-    for ((layer, cuboids, rows) <- layerResults if rows.nonEmpty) {
-        // driver: per cluster, per cuboid -> best-NPS split; across cuboids
-        // and layers -> best avg (strict >, earlier cuboid wins ties)
-        for (k <- clusters) {
-          val z = clusterSizes(k).toDouble
-          if (layer < attributes.size || 1.0 / z > opt.deltaThreshold) {
-            val byCuboid = rows
-              .filter { r =>
-                val x = r.getLong(r.fieldIndex(s"x_$k")).toDouble
-                x / z > opt.deltaThreshold &&
-                  x / r.getLong(r.fieldIndex("y")) > opt.deltaThreshold
-              }
-              .groupBy(_.getInt(0))
-            for ((cid, rs) <- byCuboid.toSeq.sortBy(_._1)) {
-              // groupby index order = key ascending; '>' keeps the first max
-              val ordered = rs.sortBy(_.getSeq[String](1).mkString(graft.core.Canonical.NulSep))
-              var bestNps = -1.0
-              var bestRow: Row = null
-              for (r <- ordered) {
-                val nSel = r.getLong(r.fieldIndex("n_sel")).toDouble
-                val a = r.getDouble(r.fieldIndex("a"))
-                val b = r.getDouble(r.fieldIndex("sum_b")) / nSel
-                // empty complement -> NaN mean, like numpy (candidate skipped)
-                val c = if (nTotal == nSel) Double.NaN
-                  else (tTermB - r.getDouble(r.fieldIndex("sum_b"))) / (nTotal - nSel)
-                val nps = if (b + c == 0) Double.NaN else 1.0 - (a + c) / (b + c)
-                if (nps > bestNps) { bestNps = nps; bestRow = r }
-              }
-              if (bestRow != null) {
-                val x = bestRow.getLong(bestRow.fieldIndex(s"x_$k")).toDouble
-                val lf = x / bestRow.getLong(bestRow.fieldIndex("y"))
-                val cf = x / z
-                val avgScore = (bestNps + lf + cf) / 3.0
-                val cur = best.get(k).map(_._1).getOrElse(-1.0)
-                if (avgScore > cur) {
-                  val cuboid = cuboids(cid)
-                  best(k) = (avgScore, RootCause(
-                    Seq(Element(cuboid, bestRow.getSeq[String](1))),
-                    cuboid, layer,
-                    Map("nps" -> bestNps, "lf" -> lf, "cf" -> cf, "avg" -> avgScore)))
-                }
-              }
+    withCluster.unpersist(); df.unpersist()
+    rootCauses(attributes, layerResults, clusterSizes, nTotal, tTermB, opt)
+  }
+
+  /** One candidate split of a layer: its element, its leaf count `y`, its
+    * anomalous leaf count per cluster `x`, and the NPS inputs over the
+    * leaves it selects: their count, their sum of term_b and their mean
+    * term_a. */
+  private[algorithms] final case class Candidate(cid: Int, key: Seq[String], y: Long,
+      x: Map[Int, Long], nSel: Long, sumB: Double, a: Double)
+
+  /** Whether an element holding `x` of a cluster's `z` anomalous leaves
+    * among its `y` leaves is a candidate split of that cluster on `layer`
+    * (LF and cluster-share thresholds, autoroot.py:110-123). */
+  private[algorithms] def isCandidate(x: Long, y: Long, z: Double, layer: Int, nAttrs: Int,
+      opt: Options): Boolean =
+    (layer < nAttrs || 1.0 / z > opt.deltaThreshold) &&
+      x / z > opt.deltaThreshold && x.toDouble / y > opt.deltaThreshold
+
+  /** The driver half of [[run]] over each layer's candidates: per cluster
+    * and cuboid the best-NPS split, across cuboids and layers the best by
+    * average score, then [[mergeRootCauses]]. `nTotal` and `tTermB`: the
+    * leaf count and the sum of term_b over all leaves. */
+  private[algorithms] def rootCauses(attributes: Seq[String], layers: Seq[(Int, Seq[Candidate])],
+      clusterSizes: Map[Int, Long], nTotal: Long, tTermB: Double, opt: Options): Seq[RootCause] = {
+    val clusters = clusterSizes.keys.toSeq.sorted
+    // best candidate per cluster, chosen across layers by avg score
+    val best = collection.mutable.Map.empty[Int, (Double, RootCause)]
+    for ((layer, cands) <- layers if cands.nonEmpty) {
+      val cuboids = attributes.combinations(layer).toSeq
+      // per cluster, per cuboid -> best-NPS split; across cuboids and
+      // layers -> best avg (strict >, earlier cuboid wins ties)
+      for (k <- clusters) {
+        val z = clusterSizes(k).toDouble
+        val byCuboid = cands
+          .filter(c => isCandidate(c.x(k), c.y, z, layer, attributes.size, opt))
+          .groupBy(_.cid)
+        for ((cid, cs) <- byCuboid.toSeq.sortBy(_._1)) {
+          // groupby index order = key ascending; '>' keeps the first max
+          val ordered = cs.sortBy(_.key.mkString(graft.core.Canonical.NulSep))
+          var bestNps = -1.0
+          var bestCand: Candidate = null
+          for (c <- ordered) {
+            val nSel = c.nSel.toDouble
+            val b = c.sumB / nSel
+            // empty complement -> NaN mean, like numpy (candidate skipped)
+            val cc = if (nTotal == nSel) Double.NaN else (tTermB - c.sumB) / (nTotal - nSel)
+            val nps = if (b + cc == 0) Double.NaN else 1.0 - (c.a + cc) / (b + cc)
+            if (nps > bestNps) { bestNps = nps; bestCand = c }
+          }
+          if (bestCand != null) {
+            val x = bestCand.x(k).toDouble
+            val lf = x / bestCand.y
+            val cf = x / z
+            val avgScore = (bestNps + lf + cf) / 3.0
+            val cur = best.get(k).map(_._1).getOrElse(-1.0)
+            if (avgScore > cur) {
+              val cuboid = cuboids(cid)
+              best(k) = (avgScore, RootCause(Seq(Element(cuboid, bestCand.key)), cuboid, layer,
+                Map("nps" -> bestNps, "lf" -> lf, "cf" -> cf, "avg" -> avgScore)))
             }
           }
         }
+      }
     }
-
-    withCluster.unpersist(); df.unpersist()
     mergeRootCauses(clusters.flatMap(k => best.get(k).map(_._2)), attributes.size)
   }
 

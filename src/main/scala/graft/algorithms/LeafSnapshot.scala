@@ -12,7 +12,7 @@ import scala.util.control.NoStackTrace
 
 /** One instance's leaf rows, collected once and held column-wise on the
   * driver: the input of the in-process kernels ([[RiskLocKernel]],
-  * [[AdtributorKernel]]).
+  * [[AdtributorKernel]], [[SqueezeKernel]], [[AutoRootKernel]]).
   *
   * The kernels must print the same numbers as the Spark path, and a
   * double sum's last bits depend on its order. So the snapshot keeps the
@@ -32,6 +32,32 @@ final case class LeafSnapshot(
   def size: Int = part.length
   def measure(m: String): Array[Double] = measures(m)
   def column(attr: String): Array[String] = values(attributes.indexOf(attr))
+
+  /** codes(a)(row): attribute `attributes(a)` of each row as a dense
+    * code, numbered in first-seen order. */
+  lazy val codes: Array[Array[Int]] = values.map { vs =>
+    val dict = collection.mutable.HashMap.empty[String, Int]
+    vs.map(v => dict.getOrElseUpdate(v, dict.size))
+  }
+
+  /** The element of the cuboid `cuboid` (attribute indices) that each of
+    * `rows` falls in, elements numbered in first-seen order, and each
+    * element's key: its values in cuboid order. */
+  def elements(cuboid: Seq[Int], rows: Array[Int]): (Array[Int], Array[Seq[String]]) = {
+    val as = cuboid.toArray
+    val radix = as.map(a => codes(a).foldLeft(0)(math.max) + 1L)
+    if (radix.map(BigInt(_)).product >= BigInt(Long.MaxValue))
+      LeafSnapshot.unsupported("too many attribute-value combinations")
+    val ids = new collection.mutable.LongMap[Int]()
+    val keys = collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val elem = rows.map { i =>
+      var key = 0L
+      var x = 0
+      while (x < as.length) { key = key * radix(x) + codes(as(x))(i); x += 1 }
+      ids.getOrElseUpdate(key, { keys += cuboid.map(a => values(a)(i)); keys.size - 1 })
+    }
+    (elem, keys.toArray)
+  }
 }
 
 object LeafSnapshot {

@@ -171,44 +171,11 @@ object Squeeze {
     val devs = pairs.map(_._1)
     val metrics = pairs.map(_._2)
 
-    val filteredDevs =
-      if (opt.enableFilter) {
-        val knee = kpiFilterKnee(metrics)
-        opt.trace(s"KPIFILTER n=${metrics.length} knee=$knee " +
-          s"metmin=${metrics.min} metmax=${metrics.max}")
-        devs.zip(metrics).collect { case (d, m) if m > knee => d }
-      } else devs
-    if (filteredDevs.isEmpty) { df.unpersist(); return Seq.empty }
-
-    val intervals = clusterIntervals(filteredDevs, opt)
-    opt.trace(s"ONEDIM in=${filteredDevs.length} clusters=" +
-      intervals.map { case (lo, hi) => filteredDevs.count(d => d >= lo && d <= hi) }
-        .mkString("[", ", ", "]"))
-    if (intervals.isEmpty) { df.unpersist(); return Seq.empty }
-
-    // interval re-expansion over ALL leaves (squeeze.py:119-126)
-    val clusterSizes = intervals.map { case (lo, hi) => devs.count(d => d >= lo && d <= hi).toLong }
-
-    // normal set: |dev| < (signed) deviation of the abnormal leaf with the
-    // smallest |dev| (squeeze.py:100-107 — RHS is intentionally unsigned-
-    // compared against the signed value, replicated exactly)
-    val abnormalDevs = devs.filter(d => intervals.exists { case (lo, hi) => d >= lo && d <= hi })
-    // |d|-ties resolve to the smaller signed value: deterministic under any
-    // collection order (the reference's row order is itself arbitrary here)
-    val normalThreshold = abnormalDevs.minBy(d => (math.abs(d), d))
-    val isNormal: Column = abs(col("deviation")) < normalThreshold
-    opt.trace(s"NORMAL thr=$normalThreshold n_normal=${devs.count(d => math.abs(d) < normalThreshold)} " +
-      s"n_abn=${abnormalDevs.length}")
-
-    // auto score weight (squeeze.py:281-300, revised formula); the
-    // attribute cardinalities were fused into the first action above
-    val nClusters = intervals.size
-    val scoreWeight = opt.scoreWeight.getOrElse {
-      val gCluster = math.log(nClusters + 1.0) / nClusters
-      val gAttribute = numAttr / math.log(numAttr + 1.0)
-      val gCoverage = -math.log(clusterSizes.sum.toDouble / nLeaves)
-      gCluster * gAttribute * gCoverage
+    val cl = clusters(devs, metrics, numAttr, nLeaves, opt).getOrElse {
+      df.unpersist(); base.unpersist(); return Seq.empty
     }
+    val isNormal: Column = abs(col("deviation")) < cl.normalThreshold
+    val intervals = cl.intervals
 
     // Per-cluster subset totals (count + L1 mass of cluster ∪ normal) for
     // ALL clusters in ONE action (VERDICT r6 #2): they depend only on the
@@ -246,14 +213,11 @@ object Squeeze {
     // deterministic line order).
     val rootCauses =
       try graft.core.Concurrency.awaitAll(
-        intervals.zipWithIndex.map { case ((lo, hi), idx) => () => {
+        intervals.zipWithIndex.map { case (iv, idx) => () => {
           val buf = collection.mutable.ArrayBuffer.empty[String]
-          val copt = opt.copy(trace = buf.append(_))
-          val members = devs.filter(d => d >= lo && d <= hi)
-          copt.trace(s"CLUSTER n=${members.length} devmin=${members.min} devmax=${members.max}")
-          val rc = locateInCluster(df, attributes, lo, hi, isNormal, scoreWeight,
-            () => subTotalsFuture.get()(idx), copt)
-          rc.foreach(r => copt.trace(s"  PICK ${r.map(_.label).sorted.mkString(";")}"))
+          val rc = locateInCluster(attributes, devs, iv, cl.scoreWeight,
+            () => subTotalsFuture.get()(idx), new SparkPasses(df, iv, isNormal, opt.derived),
+            opt.copy(trace = buf.append(_)))
           (rc, buf)
         } })
         .map { case (rc, buf) => buf.foreach(opt.trace); rc }
@@ -264,10 +228,66 @@ object Squeeze {
       finally subTotalsFuture.cancel(true)
 
     df.unpersist(); base.unpersist()
+    predictionsOf(attributes, rootCauses)
+  }
+
+  /** The clusters of one search and their scoring constants. */
+  private[algorithms] final case class Clusters(intervals: Seq[(Double, Double)],
+      normalThreshold: Double, scoreWeight: Double)
+
+  /** The driver half of the clustering (squeeze.py:60-126, 281-300): KPI
+    * knee filter, histogram clustering, the normal threshold and the auto
+    * score weight, from every leaf's (deviation, |v-f|) pair sorted.
+    * `numAttr`: the summed attribute cardinalities. None when no cluster
+    * remains. */
+  private[algorithms] def clusters(devs: Array[Double], metrics: Array[Double],
+      numAttr: Double, nLeaves: Long, opt: Options): Option[Clusters] = {
+    val filteredDevs =
+      if (opt.enableFilter) {
+        val knee = kpiFilterKnee(metrics)
+        opt.trace(s"KPIFILTER n=${metrics.length} knee=$knee " +
+          s"metmin=${metrics.min} metmax=${metrics.max}")
+        devs.zip(metrics).collect { case (d, m) if m > knee => d }
+      } else devs
+    if (filteredDevs.isEmpty) return None
+
+    val intervals = clusterIntervals(filteredDevs, opt)
+    opt.trace(s"ONEDIM in=${filteredDevs.length} clusters=" +
+      intervals.map { case (lo, hi) => filteredDevs.count(d => d >= lo && d <= hi) }
+        .mkString("[", ", ", "]"))
+    if (intervals.isEmpty) return None
+
+    // interval re-expansion over ALL leaves (squeeze.py:119-126)
+    val clusterSizes = intervals.map { case (lo, hi) => devs.count(d => d >= lo && d <= hi).toLong }
+
+    // normal set: |dev| < (signed) deviation of the abnormal leaf with the
+    // smallest |dev| (squeeze.py:100-107 — RHS is intentionally unsigned-
+    // compared against the signed value, replicated exactly)
+    val abnormalDevs = devs.filter(d => intervals.exists { case (lo, hi) => d >= lo && d <= hi })
+    // |d|-ties resolve to the smaller signed value: deterministic under any
+    // collection order (the reference's row order is itself arbitrary here)
+    val normalThreshold = abnormalDevs.minBy(d => (math.abs(d), d))
+    opt.trace(s"NORMAL thr=$normalThreshold n_normal=${devs.count(d => math.abs(d) < normalThreshold)} " +
+      s"n_abn=${abnormalDevs.length}")
+
+    // auto score weight (squeeze.py:281-300, revised formula)
+    val nClusters = intervals.size
+    val scoreWeight = opt.scoreWeight.getOrElse {
+      val gCluster = math.log(nClusters + 1.0) / nClusters
+      val gAttribute = numAttr / math.log(numAttr + 1.0)
+      val gCoverage = -math.log(clusterSizes.sum.toDouble / nLeaves)
+      gCluster * gAttribute * gCoverage
+    }
+    Some(Clusters(intervals, normalThreshold, scoreWeight))
+  }
+
+  /** The per-cluster root causes as canonical prediction strings
+    * (squeeze.py:65-70). */
+  private[algorithms] def predictionsOf(attributes: Seq[String],
+      rootCauses: Seq[Seq[Element]]): Seq[String] =
     Labels.canonicalPredictions(
       numpyUniqueRootCauses(rootCauses)
         .map(rc => frozensetOrder(attributes, rc).map(_.label).mkString(";")))
-  }
 
   /** np.unique over the per-cluster root causes (squeeze.py:65-70,
     * root_cause_string_list): numpy sorts the OBJECT array of frozensets
@@ -319,41 +339,50 @@ object Squeeze {
   private def clusterSubset(interval: (Double, Double), isNormal: Column): Column =
     (col("deviation") >= interval._1 && col("deviation") <= interval._2) || isNormal
 
-  /** One cluster's search (squeeze.py:241-275). Returns the root cause as
-    * a set of Elements. `subTotal` yields the cluster's subset totals
-    * (count + L1 mass), batched for all clusters by the caller on a
-    * background action — first read at scoring time, after this
-    * cluster's own stats pass has already run. */
-  private def locateInCluster(
-      df: DataFrame, attributes: Seq[String],
-      lo: Double, hi: Double, isNormal: Column,
-      scoreWeight: Double, subTotal: () => (Long, Array[Long]),
-      opt: Options): Option[Seq[Element]] = {
+  /** One element of a cuboid over a cluster's leaves (pass 1): its leaf
+    * counts over the cluster, over all leaves and over the subset (cluster
+    * ∪ normal), and the subset's EXACT masses. A mass the mode never reads
+    * is an empty accumulator. */
+  private[algorithms] final case class ElementStats(key: Seq[String],
+      nAbn: Long, nAll: Long, nSub: Long,
+      sv: Array[Long], sf: Array[Long], l1: Array[Long],
+      sva: Array[Long], svb: Array[Long], sfa: Array[Long], sfb: Array[Long])
 
-    val inCluster: Column = col("deviation") >= lo && col("deviation") <= hi
-    val inSubset: Column = inCluster || isNormal
-    // blocks on the background subset-totals action only at first use —
-    // i.e. at scoring, after this cluster's stats pass already ran
-    lazy val (nSubTotal, l1SubTotal) = subTotal()
+  /** A cuboid's abnormal elements in descent order, the partition count
+    * and the ripple ratio of each partition prefix. */
+  private[algorithms] final case class Plan(cid: Int, elems: Array[ElementStats],
+      partitions: Int, ratios: Array[Double])
+
+  /** The two aggregation passes of one cluster's layer, over the cuboids
+    * of that layer (cuboid id = index in `cuboids`): as Spark jobs
+    * ([[SparkPasses]]) or as loops over collected leaves
+    * ([[SqueezeKernel]]). */
+  private[algorithms] trait LayerPasses {
+    /** Pass 1: every element of every cuboid, by cuboid id. */
+    def elements(cuboids: Seq[Seq[String]]): Map[Int, Seq[ElementStats]]
+    /** Pass 2, for the plans with partitions: per cuboid id, element p-1
+      * is the exact sum of |v - f·ratios(p-1)| over the subset leaves of
+      * the plan's first p elements. */
+    def rippleL1(cuboids: Seq[Seq[String]], plans: Seq[Plan]): Map[Int, Array[Double]]
+  }
+
+  /** [[LayerPasses]] as Spark jobs over the cached leaf frame. */
+  private final class SparkPasses(df: DataFrame, interval: (Double, Double),
+      isNormal: Column, derived: Boolean) extends LayerPasses {
+    private val inCluster: Column =
+      col("deviation") >= interval._1 && col("deviation") <= interval._2
+    private val inSubset: Column = inCluster || isNormal
     // a/b measure components exist only for derived datasets
-    def derivedColOr(name: String): Column =
+    private def derivedColOr(name: String): Column =
       if (df.columns.contains(name)) col(name) else lit(0.0)
 
-    case class CuboidResult(cid: Int, layer: Int, rc: Seq[Element], score: Double, nEle: Int) {
-      def rank: Double = score * scoreWeight - nEle.toDouble * layer
-    }
-    val results = collection.mutable.ArrayBuffer.empty[CuboidResult]
-    var layer = 1
-    var break = false
-    while (layer <= attributes.size && !break) {
-      val cuboids = attributes.combinations(layer).toSeq
+    def elements(cuboids: Seq[Seq[String]]): Map[Int, Seq[ElementStats]] = {
       // NOT persisted: the explode is a narrow projection of a cached
       // parent multiplied by the cuboid count; caching that blowup spills
       // at H scale (block-manager eviction lock pileup, VERDICT r7) while
       // recomputing it per consuming pass is map-side CPU only.
       val exploded = Cuboids.expand(df, cuboids)
 
-      // pass 1: per-element stats over abnormal / all / subset rows.
       // Every double mass is an EXACT sum (graft.kernels.ExactSum): the
       // score arithmetic downstream must be a function of the row SET
       // alone — the reference ties cuboids exactly when their partitions
@@ -367,129 +396,152 @@ object Squeeze {
       // so the dead columns aggregate a null binary instead.
       def deadMass = first(lit(null).cast("binary"))
       def esIf(live: Boolean, c: => Column) = if (live) exactSum(c) else deadMass
-      val stats = exploded
+      val rows = exploded
         .groupBy(col("cb.cid").as("cid"), col("cb.key").as("key"))
         .agg(
           count(when(inCluster, lit(1))).as("n_abn"),
           count(lit(1)).as("n_all"),
           count(when(inSubset, lit(1))).as("n_sub"),
-          esIf(!opt.derived, when(inSubset, col("real")).otherwise(0.0)).as("sv_sub"),
-          esIf(!opt.derived, when(inSubset, col("predict")).otherwise(0.0)).as("sf_sub"),
+          esIf(!derived, when(inSubset, col("real")).otherwise(0.0)).as("sv_sub"),
+          esIf(!derived, when(inSubset, col("predict")).otherwise(0.0)).as("sf_sub"),
           exactSum(when(inSubset, abs(col("real") - col("predict"))).otherwise(0.0)).as("l1_sub"),
           // derived mode: the ripple ratio sums the MEASURE COMPONENTS
           // first and divides after (get_derived_dataframe reduction='sum'
           // applies op to the summed a/b frames, squeeze.py:325-335) — a
           // sum of per-row ratios is a different number entirely
-          esIf(opt.derived, when(inSubset, derivedColOr("real_a")).otherwise(0.0)).as("sva"),
-          esIf(opt.derived, when(inSubset, derivedColOr("real_b")).otherwise(0.0)).as("svb"),
-          esIf(opt.derived, when(inSubset, derivedColOr("predict_a")).otherwise(0.0)).as("sfa"),
-          esIf(opt.derived, when(inSubset, derivedColOr("predict_b")).otherwise(0.0)).as("sfb"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-      val perCid = stats.collect().groupBy(_.getInt(0))
-
-      // driver: order elements per cuboid by descent score; compute
-      // cumulative stats; build rank + ratio tables for pass 2
-      case class Plan(cid: Int, elems: Array[(Seq[String], Long, Long, Long, Array[Long], Array[Long], Array[Long], Array[Long], Array[Long], Array[Long], Array[Long])],
-          partitions: Int, ratios: Array[Double])
-      val plans = perCid.toSeq.sortBy(_._1).flatMap { case (cid, rows) =>
-        import graft.kernels.ExactSum
-        // mode-dead mass columns come back null -> empty accumulator
-        def des(r: Row, i: Int): Array[Long] = r.getAs[Array[Byte]](i) match {
-          case null => ExactSum.newAcc()
-          case b => ExactSum.deserialize(b)
-        }
-        val all = rows.map(r => (r.getSeq[String](1), r.getLong(2), r.getLong(3), r.getLong(4),
-          des(r, 5), des(r, 6), des(r, 7), des(r, 8), des(r, 9), des(r, 10), des(r, 11)))
-        val nDistinctIdx = all.length // distinct cuboid tuples in full data
-        val abn = all.filter(_._2 > 0)
-        if (abn.isEmpty) None
-        else {
-          // Reference element order (squeeze.py:148-161): np.unique sorts
-          // elements by their value tuple (AC.__lt__ on the sorted-key id;
-          // NUL-joined strings compare identically for same-arity tuples),
-          // then descent = n_abn / max(n_all, 1e-4) is ranked by
-          // np.argsort(...)[::-1] — NOT stable: the reversed tie
-          // permutation decides which elements enter each partition prefix.
-          val base = abn.sortBy(_._1.mkString(graft.core.Canonical.NulSep))
-          val descent = base.map(e => e._2.toDouble / math.max(e._3.toDouble, 1e-4)).toArray
-          val ordered = graft.kernels.NumpyArgsort.argsort(descent).reverse.map(base)
-          val nPart = math.min(math.min(ordered.length, opt.maxNumElements), nDistinctIdx - 1)
-          if (nPart <= 0) Some(Plan(cid, ordered.toArray, 0, Array.empty))
-          else {
-            // cumulative prefixes as exact merges: the prefix mass equals
-            // the exact sum over the prefix ROWS regardless of the
-            // per-element grouping, so two cuboids covering the same rows
-            // get bitwise-equal ratios (reference tie semantics)
-            val ratios = new Array[Double](nPart)
-            val cv = ExactSum.newAcc(); val cf = ExactSum.newAcc()
-            val cva = ExactSum.newAcc(); val cvb = ExactSum.newAcc()
-            val cfa = ExactSum.newAcc(); val cfb = ExactSum.newAcc()
-            for (p <- 1 to nPart) {
-              ExactSum.merge(cv, ordered(p - 1)._5); ExactSum.merge(cf, ordered(p - 1)._6)
-              ExactSum.merge(cva, ordered(p - 1)._8); ExactSum.merge(cvb, ordered(p - 1)._9)
-              ExactSum.merge(cfa, ordered(p - 1)._10); ExactSum.merge(cfb, ordered(p - 1)._11)
-              // reference: plain np division — inf/NaN propagate into ps
-              ratios(p - 1) =
-                if (opt.derived)
-                  (ExactSum.value(cva) / ExactSum.value(cvb)) /
-                    (ExactSum.value(cfa) / ExactSum.value(cfb))
-                else ExactSum.value(cv) / ExactSum.value(cf)
-            }
-            Some(Plan(cid, ordered.toArray, nPart, ratios))
-          }
-        }
+          esIf(derived, when(inSubset, derivedColOr("real_a")).otherwise(0.0)).as("sva"),
+          esIf(derived, when(inSubset, derivedColOr("real_b")).otherwise(0.0)).as("svb"),
+          esIf(derived, when(inSubset, derivedColOr("predict_a")).otherwise(0.0)).as("sfa"),
+          esIf(derived, when(inSubset, derivedColOr("predict_b")).otherwise(0.0)).as("sfb"))
+        .collect()
+      import graft.kernels.ExactSum
+      // mode-dead mass columns come back null -> empty accumulator
+      def des(r: Row, i: Int): Array[Long] = r.getAs[Array[Byte]](i) match {
+        case null => ExactSum.newAcc()
+        case b => ExactSum.deserialize(b)
       }
+      rows.toSeq.groupMap(_.getInt(0))(r => ElementStats(r.getSeq[String](1),
+        r.getLong(2), r.getLong(3), r.getLong(4),
+        des(r, 5), des(r, 6), des(r, 7), des(r, 8), des(r, 9), des(r, 10), des(r, 11)))
+    }
 
-      val maxP = (0 +: plans.map(_.partitions)).max
-      val l1Terms: Map[Int, Row] = if (maxP > 0) {
-        // pass 2: L1(v1, f1*ratio_p) for all cuboids and partitions at once
-        val spark = df.sparkSession
-        import spark.implicits._
-        val rankRows = plans.flatMap(pl => pl.elems.take(math.max(pl.partitions, 0)).zipWithIndex
-          .map { case (e, i) => (pl.cid, e._1, i + 1) })
-        val ratioRows = plans.filter(_.partitions > 0).map(pl => (pl.cid, pl.ratios.toSeq))
-        val rankDf = rankRows.toDF("rcid", "rkey", "rank")
-        val ratioDf = ratioRows.toDF("tcid", "ratios")
+    def rippleL1(cuboids: Seq[Seq[String]], plans: Seq[Plan]): Map[Int, Array[Double]] = {
+      // L1(v1, f1*ratio_p) for all cuboids and partitions at once
+      val spark = df.sparkSession
+      import spark.implicits._
+      val live = plans.filter(_.partitions > 0)
+      val maxP = live.map(_.partitions).max
+      val rankRows = live.flatMap(pl => pl.elems.take(pl.partitions).zipWithIndex
+        .map { case (e, i) => (pl.cid, e.key, i + 1) })
+      val ratioRows = live.map(pl => (pl.cid, pl.ratios.toSeq))
+      val rankDf = rankRows.toDF("rcid", "rkey", "rank")
+      val ratioDf = ratioRows.toDF("tcid", "ratios")
+      val l1a = (1 to maxP).map(p =>
+        graft.functions.ExactSumAgg.exactSum(when(col("rank") <= p,
+          abs(col("real") - col("predict") * element_at(col("ratios"), p)))
+          .otherwise(0.0)).as(s"l1a_$p"))
 
-        exploded
-          .filter(inSubset)
-          .join(broadcast(rankDf), col("cb.cid") === col("rcid") && col("cb.key") === col("rkey"))
-          .join(broadcast(ratioDf), col("cb.cid") === col("tcid"))
-          .groupBy(col("rcid").as("cid"))
-          .agg(
-            (1 to maxP).map(p =>
-              graft.functions.ExactSumAgg.exactSum(when(col("rank") <= p,
-                abs(col("real") - col("predict") * element_at(col("ratios"), p)))
-                .otherwise(0.0)).as(s"l1a_$p")).head,
-            (1 to maxP).map(p =>
-              graft.functions.ExactSumAgg.exactSum(when(col("rank") <= p,
-                abs(col("real") - col("predict") * element_at(col("ratios"), p)))
-                .otherwise(0.0)).as(s"l1a_$p")).tail: _*)
-          .collect().map(r => r.getInt(0) -> r).toMap
-      } else Map.empty
+      Cuboids.expand(df, cuboids)
+        .filter(inSubset)
+        .join(broadcast(rankDf), col("cb.cid") === col("rcid") && col("cb.key") === col("rkey"))
+        .join(broadcast(ratioDf), col("cb.cid") === col("tcid"))
+        .groupBy(col("rcid").as("cid"))
+        .agg(l1a.head, l1a.tail: _*)
+        .collect().map(r => r.getInt(0) -> Array.tabulate(maxP)(p =>
+          graft.kernels.ExactSum.valueOfBytes(r.getAs[Array[Byte]](p + 1)))).toMap
+    }
+  }
+
+  /** A cuboid's plan from its pass-1 elements; None without an abnormal
+    * element. */
+  private[algorithms] def plan(cid: Int, all: Seq[ElementStats], opt: Options): Option[Plan] = {
+    import graft.kernels.ExactSum
+    val nDistinctIdx = all.length // distinct cuboid tuples in full data
+    val abn = all.filter(_.nAbn > 0)
+    if (abn.isEmpty) return None
+    // Reference element order (squeeze.py:148-161): np.unique sorts
+    // elements by their value tuple (AC.__lt__ on the sorted-key id;
+    // NUL-joined strings compare identically for same-arity tuples),
+    // then descent = n_abn / max(n_all, 1e-4) is ranked by
+    // np.argsort(...)[::-1] — NOT stable: the reversed tie
+    // permutation decides which elements enter each partition prefix.
+    val base = abn.sortBy(_.key.mkString(graft.core.Canonical.NulSep)).toArray
+    val descent = base.map(e => e.nAbn.toDouble / math.max(e.nAll.toDouble, 1e-4))
+    val ordered = graft.kernels.NumpyArgsort.argsort(descent).reverse.map(base)
+    val nPart = math.min(math.min(ordered.length, opt.maxNumElements), nDistinctIdx - 1)
+    if (nPart <= 0) return Some(Plan(cid, ordered, 0, Array.empty))
+    // cumulative prefixes as exact merges: the prefix mass equals
+    // the exact sum over the prefix ROWS regardless of the
+    // per-element grouping, so two cuboids covering the same rows
+    // get bitwise-equal ratios (reference tie semantics)
+    val ratios = new Array[Double](nPart)
+    val cv = ExactSum.newAcc(); val cf = ExactSum.newAcc()
+    val cva = ExactSum.newAcc(); val cvb = ExactSum.newAcc()
+    val cfa = ExactSum.newAcc(); val cfb = ExactSum.newAcc()
+    for (p <- 1 to nPart) {
+      val e = ordered(p - 1)
+      ExactSum.merge(cv, e.sv); ExactSum.merge(cf, e.sf)
+      ExactSum.merge(cva, e.sva); ExactSum.merge(cvb, e.svb)
+      ExactSum.merge(cfa, e.sfa); ExactSum.merge(cfb, e.sfb)
+      // reference: plain np division — inf/NaN propagate into ps
+      ratios(p - 1) =
+        if (opt.derived)
+          (ExactSum.value(cva) / ExactSum.value(cvb)) /
+            (ExactSum.value(cfa) / ExactSum.value(cfb))
+        else ExactSum.value(cv) / ExactSum.value(cf)
+    }
+    Some(Plan(cid, ordered, nPart, ratios))
+  }
+
+  /** One cluster's search (squeeze.py:241-275), with its CLUSTER, CUBOID
+    * and PICK trace lines. Returns the root cause as a set of Elements.
+    * `devs`: every leaf's deviation. `subTotal` yields the cluster's
+    * subset totals (count + L1 mass), first read at scoring time — after
+    * this cluster's own first pass, so a caller can compute them in the
+    * background. */
+  private[algorithms] def locateInCluster(
+      attributes: Seq[String], devs: Array[Double], interval: (Double, Double),
+      scoreWeight: Double, subTotal: () => (Long, Array[Long]),
+      passes: LayerPasses, opt: Options): Option[Seq[Element]] = {
+    val (lo, hi) = interval
+    val members = devs.filter(d => d >= lo && d <= hi)
+    opt.trace(s"CLUSTER n=${members.length} devmin=${members.min} devmax=${members.max}")
+    lazy val (nSubTotal, l1SubTotal) = subTotal()
+
+    case class CuboidResult(cid: Int, layer: Int, rc: Seq[Element], score: Double, nEle: Int) {
+      def rank: Double = score * scoreWeight - nEle.toDouble * layer
+    }
+    val results = collection.mutable.ArrayBuffer.empty[CuboidResult]
+    var layer = 1
+    var break = false
+    while (layer <= attributes.size && !break) {
+      val cuboids = attributes.combinations(layer).toSeq
+      val plans = passes.elements(cuboids).toSeq.sortBy(_._1)
+        .flatMap { case (cid, elems) => plan(cid, elems, opt) }
+      val l1Terms: Map[Int, Array[Double]] =
+        if (plans.exists(_.partitions > 0)) passes.rippleL1(cuboids, plans) else Map.empty
 
       // One result per cuboid IN COMBINATION ORDER (the cluster-level rank
       // sort is stable, so tied ranks resolve by this order —
       // squeeze.py:249-268).
       for (pl <- plans) {
+        val cuboid = cuboids(pl.cid)
         if (pl.partitions <= 0) {
           // Degenerate cuboid: the reference returns (all abnormal
           // elements, -inf), still selectable when every cuboid is
           // degenerate (squeeze.py:223-228).
-          val cuboid = cuboids(pl.cid)
-          val rc = pl.elems.map(e => Element(cuboid, e._1)).toSeq
+          val rc = pl.elems.map(e => Element(cuboid, e.key)).toSeq
           opt.trace(s"  CUBOID ${cuboid.mkString(",")} n_rc=${rc.size} score=-inf " +
             s"rc=${rc.map(_.label).mkString(";")}")
           results += CuboidResult(pl.cid, layer, rc, Double.NegativeInfinity, pl.elems.length)
         } else {
-          val l1aRow = l1Terms.get(pl.cid)
+          val l1a = l1Terms.get(pl.cid)
           var cumN = 0L
           val cumL1 = graft.kernels.ExactSum.newAcc()
           val scores = new Array[Double](pl.partitions)
           for (p <- 1 to pl.partitions) {
-            cumN += pl.elems(p - 1)._4
-            graft.kernels.ExactSum.merge(cumL1, pl.elems(p - 1)._7)
+            cumN += pl.elems(p - 1).nSub
+            graft.kernels.ExactSum.merge(cumL1, pl.elems(p - 1).l1)
             val n1 = cumN.toDouble
             val n2 = (nSubTotal - cumN).toDouble
             val l1v1f1 = graft.kernels.ExactSum.value(cumL1)
@@ -504,9 +556,7 @@ object Squeeze {
                 graft.kernels.ExactSum.merge(c, graft.kernels.ExactSum.negated(cumL1))
                 graft.kernels.ExactSum.value(c)
               }
-            val l1v1a1 = l1aRow
-              .map(r => graft.kernels.ExactSum.valueOfBytes(r.getAs[Array[Byte]](p)))
-              .getOrElse(0.0)
+            val l1v1a1 = l1a.map(_(p - 1)).getOrElse(0.0)
             val denom = divideGuard(l1v1f1, n1) + divideGuard(l1v2f2, n2)
             val num = divideGuard(l1v1a1, n1) + divideGuard(l1v2f2, n2)
             val ps = 1.0 - num / denom
@@ -518,19 +568,19 @@ object Squeeze {
           val order = graft.kernels.NumpyArgsort.argsort(scores)
           val bestP = order(order.length - 1) + 1
           val bestScore = scores(bestP - 1)
-          val cuboid = cuboids(pl.cid)
-          val rc = pl.elems.take(bestP).map(e => Element(cuboid, e._1)).toSeq
+          val rc = pl.elems.take(bestP).map(e => Element(cuboid, e.key)).toSeq
           opt.trace(s"  CUBOID ${cuboid.mkString(",")} n_rc=${rc.size} score=$bestScore " +
             s"rc=${rc.map(_.label).mkString(";")}")
           results += CuboidResult(pl.cid, layer, rc, bestScore, bestP)
         }
       }
-      stats.unpersist()
       if (results.exists(_.score > opt.psUpperBound)) break = true
       layer += 1
     }
 
     // best rank wins; stable ties keep layer/cuboid enumeration order
-    results.filter(_.rc.nonEmpty).sortBy(r => -r.rank).headOption.map(_.rc)
+    val picked = results.filter(_.rc.nonEmpty).sortBy(r => -r.rank).headOption.map(_.rc)
+    picked.foreach(r => opt.trace(s"  PICK ${r.map(_.label).sorted.mkString(";")}"))
+    picked
   }
 }

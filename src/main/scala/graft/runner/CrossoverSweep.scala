@@ -58,6 +58,13 @@ object CrossoverSweep {
     val spark = graft.core.Sessions.local(graft.core.Sessions.cpus, "64", "graft-crossover")
     spark.sparkContext.setLogLevel("WARN")
 
+    // untimed warm-up of every timed path: the first call in a JVM pays
+    // Spark's and the code generator's start-up, which would otherwise
+    // land on whichever cell runs first
+    val warmUp = HCorpus.corpus(spark, 2, Seq("a" -> 6, "b" -> 5, "c" -> 4)).localCheckpoint(true)
+    for (algo <- algos; mode <- Seq("batch", "sequential")) Runner.runKeyed(warmUp, algo, mode, nThreads)
+    warmUp.unpersist()
+
     val results = collection.mutable.ArrayBuffer.empty[CellResult]
     for ((dims, n) <- cells) {
       val corpus = HCorpus.corpus(spark, n, dims).localCheckpoint(true)

@@ -147,12 +147,13 @@ object Runner {
     loadInstance(spark, dataRoot, biggest, derivedFlag)._1.count()
   }
 
-  /** Leaf count up to which `runAlgorithm` runs riskloc, adtributor and
-    * rev_rec_adtributor in-process: one bounded collect, then the
-    * algorithm's kernel over the collected rows (RiskLocKernel,
-    * AdtributorKernel) instead of its Spark jobs. The largest measured
-    * size at which none of the three kernels was slower than its Spark
-    * path (CROSSOVER.md, "In-process tier"). */
+  /** Leaf count up to which `runAlgorithm` runs riskloc, adtributor,
+    * rev_rec_adtributor, squeeze and autoroot in-process: one bounded
+    * collect, then the algorithm's kernel over the collected rows
+    * (RiskLocKernel, AdtributorKernel, SqueezeKernel, AutoRootKernel)
+    * instead of its Spark jobs. The largest measured size at which none of
+    * the five kernels was slower than its Spark path (CROSSOVER.md,
+    * "In-process tier"). */
   val InProcessMaxLeaves: Int = 48000
 
   private type Kernel = (LeafSnapshot, String => Unit) => Seq[String]
@@ -209,7 +210,7 @@ object Runner {
         val o = AutoRoot.Options(deltaThreshold = d("delta-threshold", 0.25))
         Algorithm(
           (df, attrs, _) => AutoRoot.predictions(AutoRoot.run(df, attrs, o)),
-          None,
+          Some((Seq("real", "predict"), (s, _) => AutoRoot.predictions(AutoRootKernel.run(s, o)))),
           (u, attrs) => BatchAutoRoot.run(u, id, attrs, o).view.mapValues(AutoRoot.predictions).toMap)
       case "squeeze" =>
         val o = Squeeze.Options(
@@ -218,7 +219,8 @@ object Runner {
           derived = derived)
         Algorithm(
           (df, attrs, t) => Squeeze.run(df, attrs, o.copy(trace = t)),
-          None,
+          Some((LeafSnapshot.measureColumns(derived, withRatios = false),
+            (s, t) => SqueezeKernel.run(s, o.copy(trace = t)))),
           (u, attrs) => BatchSqueeze.run(u, id, attrs, o))
       case "hotspot" =>
         val o = HotSpot.Options(
@@ -245,10 +247,11 @@ object Runner {
   /** One algorithm over one instance snapshot → canonical predictions.
     * `opts`: the per-algorithm flags (see [[algorithmFor]]).
     *
-    * riskloc, adtributor and rev_rec_adtributor first collect at most
-    * `inProcessCap + 1` leaves; an instance of at most `inProcessCap`
-    * leaves runs in-process (see [[InProcessMaxLeaves]]) with the same
-    * predictions and trace lines, and a larger one takes the Spark path.
+    * riskloc, adtributor, rev_rec_adtributor, squeeze and autoroot first
+    * collect at most `inProcessCap + 1` leaves; an instance of at most
+    * `inProcessCap` leaves runs in-process (see [[InProcessMaxLeaves]])
+    * with the same predictions and trace lines, and a larger one takes the
+    * Spark path. hotspot and robustspot always run on Spark.
     * An instance without leaf rows is an IllegalArgumentException. */
   def runAlgorithm(df: DataFrame, attributes: Seq[String], algorithm: String,
       derived: Boolean, opts: Map[String, String],

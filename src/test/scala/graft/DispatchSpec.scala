@@ -57,35 +57,37 @@ class DispatchSpec extends AnyFunSuite with TestTimeLimit {
 
   test("runCorpus localizes a labeled parquet corpus in both modes") {
     val dims = Seq("a" -> 4, "b" -> 3, "c" -> 5, "d" -> 4)
-    val dir = Files.createTempDirectory("graft-dispatch").toString
-    val n = 3
-    HCorpus.corpus(spark, n, dims).write.mode("overwrite").parquet(dir)
-    val labels = HCorpus.labels(n, dims).toSeq.sorted
-      .map { case (id, l) => s"$id\t$l" }.mkString("", "\n", "\n")
-    Files.writeString(java.nio.file.Paths.get(dir, "_labels.tsv"), labels)
+    TestSpark.withTempDir("graft-dispatch") { dir =>
+      val n = 3
+      HCorpus.corpus(spark, n, dims).write.mode("overwrite").parquet(dir)
+      val labels = HCorpus.labels(n, dims).toSeq.sorted
+        .map { case (id, l) => s"$id\t$l" }.mkString("", "\n", "\n")
+      Files.writeString(java.nio.file.Paths.get(dir, "_labels.tsv"), labels)
 
-    val seq = Runner.runCorpus(spark, dir, "adtributor", "sequential", nThreads = 3)
-    val bat = Runner.runCorpus(spark, dir, "adtributor", "batch", nThreads = 3)
-    assert(seq.size == n && bat.size == n)
-    val seqF1 = seq.sortBy(_.file).map(r => r.file -> r.f1)
-    val batF1 = bat.sortBy(_.file).map(r => r.file -> r.f1)
-    assert(seqF1 == batF1, s"sequential $seqF1 != batch $batF1")
-    // the injected layer-1/2 anomalies are found (k=3 adtributor: tp>0)
-    assert(seq.map(_.tp).sum > 0)
+      val seq = Runner.runCorpus(spark, dir, "adtributor", "sequential", nThreads = 3)
+      val bat = Runner.runCorpus(spark, dir, "adtributor", "batch", nThreads = 3)
+      assert(seq.size == n && bat.size == n)
+      val seqF1 = seq.sortBy(_.file).map(r => r.file -> r.f1)
+      val batF1 = bat.sortBy(_.file).map(r => r.file -> r.f1)
+      assert(seqF1 == batF1, s"sequential $seqF1 != batch $batF1")
+      // the injected layer-1/2 anomalies are found (k=3 adtributor: tp>0)
+      assert(seq.map(_.tp).sum > 0)
 
-    // auto mode on a toy corpus (240-960 rows/instance) must pick batch
-    val auto = Runner.runCorpus(spark, dir, "adtributor", "auto", nThreads = 3)
-    assert(auto.sortBy(_.file).map(r => r.file -> r.f1) == batF1)
+      // auto mode on a toy corpus (240-960 rows/instance) must pick batch
+      val auto = Runner.runCorpus(spark, dir, "adtributor", "auto", nThreads = 3)
+      assert(auto.sortBy(_.file).map(r => r.file -> r.f1) == batF1)
+    }
   }
 
   test("runCorpus rejects a repeated instance id in _labels.tsv") {
     val dims = Seq("a" -> 4, "b" -> 3, "c" -> 5, "d" -> 4)
-    val dir = Files.createTempDirectory("graft-dup-labels").toString
-    HCorpus.corpus(spark, 2, dims).write.mode("overwrite").parquet(dir)
-    val id = HCorpus.labels(2, dims).keys.min
-    Files.writeString(java.nio.file.Paths.get(dir, "_labels.tsv"), s"$id\ta=a1\n$id\tb=b1\n")
-    val e = intercept[IllegalArgumentException](
-      Runner.runCorpus(spark, dir, "adtributor", "sequential", nThreads = 2))
-    assert(e.getMessage.contains(s"'$id'"), e.getMessage)
+    TestSpark.withTempDir("graft-dup-labels") { dir =>
+      HCorpus.corpus(spark, 2, dims).write.mode("overwrite").parquet(dir)
+      val id = HCorpus.labels(2, dims).keys.min
+      Files.writeString(java.nio.file.Paths.get(dir, "_labels.tsv"), s"$id\ta=a1\n$id\tb=b1\n")
+      val e = intercept[IllegalArgumentException](
+        Runner.runCorpus(spark, dir, "adtributor", "sequential", nThreads = 2))
+      assert(e.getMessage.contains(s"'$id'"), e.getMessage)
+    }
   }
 }

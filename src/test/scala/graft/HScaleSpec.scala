@@ -27,13 +27,13 @@ class HScaleSpec extends AnyFunSuite with TestTimeLimit {
   private val dims = Seq("a" -> 4, "b" -> 3, "c" -> 5, "d" -> 4)
   private val attrs = dims.map(_._1)
 
-  private def corpus(n: Int) = {
-    // materialize like the runner: algorithms re-read a stable table, not
-    // the generator expressions
-    val dir = java.nio.file.Files.createTempDirectory("graft_hspec").toString
-    HCorpus.corpus(spark, n, dims).write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
-  }
+  // materialize like the runner: algorithms re-read a stable table, not
+  // the generator expressions
+  private def withCorpus[T](n: Int)(body: org.apache.spark.sql.DataFrame => T): T =
+    TestSpark.withTempDir("graft_hspec") { dir =>
+      HCorpus.corpus(spark, n, dims).write.mode("overwrite").parquet(dir)
+      body(spark.read.parquet(dir))
+    }
 
   test("batch == sequential and job count stays flat when instances double") {
     // 3 vs 6 instances: HCorpus rotates through 3 anomaly SHAPES (layer
@@ -41,8 +41,8 @@ class HScaleSpec extends AnyFunSuite with TestTimeLimit {
     // shape mix identical — job growth can then only come from instance
     // count, which is exactly what must stay flat. (2 -> 4 would introduce
     // a brand-new anomaly shape and its data-dependent iterations.)
-    val (p3, notes3) = HScale.runRehearsal(spark, corpus(3), attrs, seqSamples = 2)
-    val (p6, notes6) = HScale.runRehearsal(spark, corpus(6), attrs, seqSamples = 2)
+    val (p3, notes3) = withCorpus(3)(HScale.runRehearsal(spark, _, attrs, seqSamples = 2))
+    val (p6, notes6) = withCorpus(6)(HScale.runRehearsal(spark, _, attrs, seqSamples = 2))
     assert(notes3.isEmpty, notes3.mkString("; "))
     assert(notes6.isEmpty, notes6.mkString("; "))
 

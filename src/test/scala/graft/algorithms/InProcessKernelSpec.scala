@@ -10,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The in-process tier (RiskLocKernel, AdtributorKernel): on collected
+/** The in-process tier (RiskLocKernel, AdtributorKernel, SqueezeKernel,
+  * AutoRootKernel): on collected
   * leaves the kernels reproduce the committed goldens, and they equal the
   * Spark path on predictions AND on the full trace stream, including
   * multi-character dimension names, derived measures, several input
@@ -47,6 +48,18 @@ class InProcessKernelSpec extends AnyFunSuite with TestTimeLimit {
       val s = snapshotOf(df, attrs, LeafSnapshot.measureColumns(derived, withRatios = false))
       val o = Adtributor.Options(derived = derived)
       assert(AdtributorKernel.adtributor(s, o) == Adtributor.run(df, attrs, o), s"$what adtributor")
+    }
+    case "squeeze" => () => {
+      val s = snapshotOf(df, attrs, LeafSnapshot.measureColumns(derived, withRatios = false))
+      val (k, kt) = traced(t => SqueezeKernel.run(s, Squeeze.Options(derived = derived, trace = t)))
+      val (sp, st) = traced(t => Squeeze.run(df, attrs, Squeeze.Options(derived = derived, trace = t)))
+      assert(kt == st, s"$what squeeze trace")
+      assert(k == sp, s"$what squeeze")
+    }
+    case "autoroot" => () => {
+      val s = snapshotOf(df, attrs, Seq("real", "predict"))
+      val o = AutoRoot.Options(deltaThreshold = 0.25)
+      assert(AutoRootKernel.run(s, o) == AutoRoot.run(df, attrs, o), s"$what autoroot")
     }
     case "rev_rec" => () => {
       val s = snapshotOf(df, attrs, LeafSnapshot.measureColumns(derived, withRatios = false))
@@ -124,13 +137,49 @@ class InProcessKernelSpec extends AnyFunSuite with TestTimeLimit {
     for ((key, preds) <- cases) assert(preds.sorted == golden(key), key.toString)
   }
 
+  test("squeeze and autoroot kernels reproduce the gen-corpus and fixture goldens") {
+    val golden = scala.io.Source.fromFile(s"$fixturesDir/gen_corpus_golden.tsv", "UTF-8")
+      .getLines().map(_.split("\t", -1)).filter(f => f(0) == "squeeze" || f(0) == "autoroot")
+      .toSeq
+    assert(golden.size == 20)
+    runChecks(golden.groupBy(_(1)).toSeq.map { case (file, rows) => () => {
+      val df = InstanceSource.readFundamental(spark, corpusDir, file)
+      val attrs = df.columns.filterNot(Set("real", "predict")).toSeq.sorted
+      val s = snapshotOf(df, attrs, Seq("real", "predict"))
+      for (f <- rows) {
+        val preds =
+          if (f(0) == "squeeze") SqueezeKernel.run(s)
+          else AutoRoot.predictions(AutoRootKernel.run(s, AutoRoot.Options(deltaThreshold = 0.25)))
+        val want = if (f(3).isEmpty) Seq.empty[String] else f(3).split('|').toSeq
+        assert(Labels.canonicalPredictions(preds).sorted == want.sorted, s"${f(0)}/$file")
+        val sc = Evaluation.score(preds, f(2))
+        assert((sc.tp, sc.fp, sc.fn) == ((f(4).toInt, f(5).toInt, f(6).toInt)))
+      }
+    }})
+    val fixtureGolden = scala.io.Source.fromFile(s"$fixturesDir/golden.tsv").getLines().map { l =>
+      val Array(fix, algo, preds) = l.split("\t", 3)
+      (fix, algo) -> preds.split(";").toSeq.sorted
+    }.toMap
+    def fund(name: String) = snapshotOf(fixture(name), abc, Seq("real", "predict"))
+    val d4 = snapshotOf(derived4, abc, LeafSnapshot.measureColumns(derived = true, withRatios = false))
+    val ar = AutoRoot.Options(deltaThreshold = 0.25)
+    val cases: Seq[((String, String), Seq[String])] = Seq(
+      ("fixture1", "autoroot_default") -> AutoRoot.predictions(AutoRootKernel.run(fund("fixture1"), ar)),
+      ("fixture2", "autoroot_default") -> AutoRoot.predictions(AutoRootKernel.run(fund("fixture2"), ar)),
+      ("fixture1", "squeeze_default") -> SqueezeKernel.run(fund("fixture1")),
+      ("fixture2", "squeeze_default") -> SqueezeKernel.run(fund("fixture2")),
+      ("fixture4", "squeeze_derived") -> SqueezeKernel.run(d4, Squeeze.Options(derived = true)))
+    for ((key, preds) <- cases) assert(preds.sorted == fixtureGolden(key), key.toString)
+  }
+
   // ---- kernel == Spark path
 
   test("kernels equal the Spark path on the rs_synth cases (derived, long dimension names)") {
     runChecks(Seq("case1_synth", "case2_synth", "case3_synth").flatMap { c =>
       val raw = RsSource.readRaw(spark, s"$rsDir/$c.csv")
       val df = RsSource.snapshot(raw, RsLabels.labelFor(rsDir, c).timestamp).cache()
-      parity(df, RsSource.attributesOf(raw), derived = true, c)
+      parity(df, RsSource.attributesOf(raw), derived = true, c,
+        algos = Seq("riskloc", "adtributor", "rev_rec", "squeeze"))
     })
   }
 
@@ -156,6 +205,7 @@ class InProcessKernelSpec extends AnyFunSuite with TestTimeLimit {
         case (2, 1, 1) => (Double.NaN, 1.0)
         case (3, 2, 2) => (Double.PositiveInfinity, 1.5)
         case (0, 0, 4) => (0.7, Double.NegativeInfinity)
+        case (1, 2, 3) => (-2.5, 1.0) // a negative real: Squeeze's min-real shift
         case _ => (if (rb == 0.0) 0.0 else ra / rb, if (pb == 0.0) 0.0 else pa / pb)
       }
       Row(s"a$a", s"b$b", s"c$c", r, p, ra, pa, rb, pb)
@@ -165,9 +215,10 @@ class InProcessKernelSpec extends AnyFunSuite with TestTimeLimit {
         .map(StructField(_, DoubleType)))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema).cache()
     assert(df.rdd.getNumPartitions == 4)
-    runChecks(parity(df, abc, derived = true, "constructed") ++
+    runChecks(parity(df, abc, derived = true, "constructed",
+        algos = Seq("riskloc", "adtributor", "rev_rec", "squeeze")) ++
       parity(df.drop("real_a", "predict_a", "real_b", "predict_b"), abc, derived = false,
-        "constructed fundamental", algos = Seq("riskloc", "adtributor")))
+        "constructed fundamental", algos = Seq("riskloc", "adtributor", "squeeze", "autoroot")))
   }
 
   test("a kernel call through runAlgorithm runs one Spark job; cap 0 takes the Spark path") {
@@ -186,7 +237,7 @@ class InProcessKernelSpec extends AnyFunSuite with TestTimeLimit {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      for (algo <- Seq("riskloc", "adtributor", "rev_rec_adtributor")) {
+      for (algo <- Seq("riskloc", "adtributor", "rev_rec_adtributor", "squeeze", "autoroot")) {
         val (local, n) = jobsOf(Runner.runAlgorithm(df, abc, algo, derived = false, Map.empty))
         assert(n == 1, s"$algo ran $n jobs")
         val (onSpark, m) = jobsOf(Runner.runAlgorithm(df, abc, algo, derived = false, Map.empty,
