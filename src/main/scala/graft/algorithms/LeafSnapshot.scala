@@ -40,20 +40,29 @@ final case class LeafSnapshot(
     vs.map(v => dict.getOrElseUpdate(v, dict.size))
   }
 
+  /** radix(a): the number of distinct values of `attributes(a)`, the
+    * base of attribute `a`'s digit when a cuboid's element is one Long. */
+  lazy val radix: Array[Long] = codes.map(c => c.foldLeft(0)(math.max) + 1L)
+
+  /** Raises [[LeafSnapshot.Unsupported]] unless `slots` times the
+    * product of the radices of `cuboid` (attribute indices) fits in a
+    * Long: the cuboid's element keys, times `slots`, then do too. */
+  def requireLongKeys(cuboid: Seq[Int], slots: BigInt = 1): Unit =
+    if (cuboid.map(a => BigInt(radix(a))).product * slots >= BigInt(Long.MaxValue))
+      LeafSnapshot.unsupported("too many attribute-value combinations")
+
   /** The element of the cuboid `cuboid` (attribute indices) that each of
     * `rows` falls in, elements numbered in first-seen order, and each
     * element's key: its values in cuboid order. */
   def elements(cuboid: Seq[Int], rows: Array[Int]): (Array[Int], Array[Seq[String]]) = {
     val as = cuboid.toArray
-    val radix = as.map(a => codes(a).foldLeft(0)(math.max) + 1L)
-    if (radix.map(BigInt(_)).product >= BigInt(Long.MaxValue))
-      LeafSnapshot.unsupported("too many attribute-value combinations")
+    requireLongKeys(cuboid)
     val ids = new collection.mutable.LongMap[Int]()
     val keys = collection.mutable.ArrayBuffer.empty[Seq[String]]
     val elem = rows.map { i =>
       var key = 0L
       var x = 0
-      while (x < as.length) { key = key * radix(x) + codes(as(x))(i); x += 1 }
+      while (x < as.length) { key = key * radix(as(x)) + codes(as(x))(i); x += 1 }
       ids.getOrElseUpdate(key, { keys += cuboid.map(a => values(a)(i)); keys.size - 1 })
     }
     (elem, keys.toArray)

@@ -74,14 +74,11 @@ object RiskLocKernel {
     val epZ = ep.map(e => if (cmp(e, 0.0) > 0) e else 0.0)
     val nz = Array.tabulate(n)(i => real(i) != 0.0 && pred(i) != 0.0)
 
-    // ---- dictionary codes: a cuboid's element is one Long
-    val codes = Array.tabulate(attributes.size) { a =>
-      val dict = collection.mutable.HashMap.empty[String, Int]
-      s.values(a).map(v => dict.getOrElseUpdate(v, dict.size))
-    }
-    val radix = codes.map(c => if (c.isEmpty) 1L else c.max.toLong + 1)
-    if (radix.map(BigInt(_)).product * (BigInt(1) << attributes.size) >= BigInt(Long.MaxValue))
-      unsupported("too many attribute-value combinations")
+    // ---- dictionary codes: a cuboid's element is one Long, times the
+    // stage's cuboid count
+    val codes = s.codes
+    val radix = s.radix
+    s.requireLongKeys(attributes.indices, BigInt(1) << attributes.size)
 
     /** Every element of `cuboids` (cid, attribute indices) over `rows`,
       * pruned by `state`, with the stage's sums; `ripple` adds the

@@ -166,7 +166,7 @@ object Squeeze {
       count(lit(1)).as("n"))
       .collect()(0)
     val nLeaves = vecRow.getLong(2) // sampled basis — consistent with devs/metrics
-    if (nLeaves == 0) { df.unpersist(); return Seq.empty }
+    if (nLeaves == 0) { df.unpersist(); base.unpersist(); return Seq.empty }
     val pairs = vecRow.getSeq[Double](0).zip(vecRow.getSeq[Double](1)).sorted.toArray
     val devs = pairs.map(_._1)
     val metrics = pairs.map(_._2)

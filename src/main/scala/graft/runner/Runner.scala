@@ -152,8 +152,9 @@ object Runner {
     * collect, then the algorithm's kernel over the collected rows
     * (RiskLocKernel, AdtributorKernel, SqueezeKernel, AutoRootKernel)
     * instead of its Spark jobs. The largest measured size at which none of
-    * the five kernels was slower than its Spark path (CROSSOVER.md,
-    * "In-process tier"). */
+    * the five kernels was slower than its Spark path; at 480k the
+    * Adtributor and RevRec kernels lose (CROSSOVER.md, "In-process
+    * tier"). */
   val InProcessMaxLeaves: Int = 48000
 
   private type Kernel = (LeafSnapshot, String => Unit) => Seq[String]

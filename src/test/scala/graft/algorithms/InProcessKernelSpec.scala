@@ -221,6 +221,35 @@ class InProcessKernelSpec extends AnyFunSuite with TestTimeLimit {
         "constructed fundamental", algos = Seq("riskloc", "adtributor", "squeeze", "autoroot")))
   }
 
+  test("autoroot kernel replays Spark's per-partition sums where they decide the winner") {
+    // a1 and a2 hold the same four leaves in the same order: two anomalies
+    // (term_b 0.7) and term_b 0.2 and 0.1. a1's leaves sit in partition 0;
+    // a2's first leaf sits in partition 1 and the other three in partition
+    // 2. One sequential sum gives a1 and a2 bit-equal NPS, and the tie goes
+    // to a1; summed per partition, a2's sum(term_b) differs in its last
+    // bit and a2 wins. The b values keep every b element at 1 of 4
+    // anomalous leaves, below the 0.25 split thresholds.
+    def leaf(a: String, b: String, kind: Char): Row = kind match {
+      case 'x' => Row(a, b, 10.0, 17.0)
+      case '2' => Row(a, b, 10.0, 12.0)
+      case '1' => Row(a, b, 10.0, 11.0)
+      case '0' => Row(a, b, 10.0, 10.0)
+    }
+    val a1 = Seq(leaf("a1", "b1", 'x'), leaf("a1", "b2", '2'), leaf("a1", "b3", '1'), leaf("a1", "b4", 'x'))
+    val a2 = Seq(leaf("a2", "b2", 'x'), leaf("a2", "b1", '2'), leaf("a2", "b4", '1'), leaf("a2", "b3", 'x'))
+    val normal = for (a <- Seq("a3", "a4"); b <- Seq("b1", "b2", "b3", "b4")) yield leaf(a, b, '0')
+    val rows = a1 ++ a2.take(1) ++ normal.take(3) ++ a2.drop(1) ++ normal.drop(3)
+    val schema = StructType(Seq("a", "b").map(StructField(_, StringType)) ++
+      Seq("real", "predict").map(StructField(_, DoubleType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema).cache()
+    assert(df.rdd.glom().collect().map(_.length).toSeq == Seq(4, 4, 4, 4))
+    val o = AutoRoot.Options(deltaThreshold = 0.25)
+    val s = snapshotOf(df, Seq("a", "b"), Seq("real", "predict"))
+    val kernel = AutoRootKernel.run(s, o)
+    assert(kernel == AutoRoot.run(df, Seq("a", "b"), o))
+    assert(kernel.map(_.elements.map(_.label)) == Seq(Seq("a=a2")))
+  }
+
   test("a kernel call through runAlgorithm runs one Spark job; cap 0 takes the Spark path") {
     val df = fixture("fixture1")
     df.count()
